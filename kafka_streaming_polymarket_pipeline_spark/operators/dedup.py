@@ -61,6 +61,71 @@ _PERM_A = [_rng.randrange(1, 1 << 30) for _ in range(NUM_PERM)]
 _PERM_B = [_rng.randrange(0, _MERSENNE_P) for _ in range(NUM_PERM)]
 
 
+# --- The funnel's NUM_PERM-wide expressions, as SQL text -------------------
+#
+# Every PySpark Column operation is at least one py4j round trip to the
+# JVM. Built from Columns, the 128-wide expressions below cost 5k-24k round
+# trips per operator (0.5-2.7 s of driver time per build, paid by every
+# streaming micro-batch before a task runs). They are built here once, as
+# SQL text, and each operator hands its list to the JVM in one call (_wide,
+# selectExpr, F.expr). The text
+# spells the Column form's expressions in the same order with the same
+# literal types: a SQL integer literal is INT when it fits 32 bits and
+# BIGINT otherwise, which is how py4j passes a Python int to F.lit.
+#
+# Not spark.sql(text, t=df): that binds frames through temporary views,
+# and dropping such a view uncaches the frame it wraps, which would evict
+# the persisted payload the funnel's consumers read.
+
+
+def _wide(fields: str) -> Column:
+    """A comma-separated SQL select list as ONE struct column ``_w``, for
+    the caller to expand with ``.select(..., "_w.*")``: one py4j call
+    however long the list. Works in ``select`` and, over aggregate
+    functions, in ``agg``. The plan evaluates the same expressions once
+    per output row (per doc in this module) into the struct, and a
+    Project reads the fields back out."""
+    return F.expr(f"struct({fields}) AS _w")
+
+
+def _perm_mins() -> str:
+    """The 128 permutation min-aggregates over a 64-bit shingle hash
+    column ``h64`` (h32 = h64 mod 2^32 exactly as the string path always
+    hashed: pmod(xxhash64(sh), 2^32)), as one SQL select list.
+
+    Text, not Columns: as Columns each aggregate is eight Column
+    operations (three ``F.lit``, ``*``, ``+``, ``%``, ``min``, ``alias``),
+    each one or more py4j calls, ~9k calls and ~1 s per payload build.
+    The text is built once, at import (:data:`_PERM_MINS`)."""
+    return ", ".join(
+        f"min(({_PERM_A[i]} * pmod(h64, {1 << 32}) + {_PERM_B[i]}) % {_MERSENNE_P}) AS m{i}"
+        for i in range(NUM_PERM)
+    )
+
+
+def _band_structs(r: int) -> str:
+    """One ``(band_id, band_hash)`` struct per band of ``r`` signature
+    columns, exploded to one row per band as ``bk``."""
+    return "explode(array({})) AS bk".format(", ".join(
+        f"struct({b} AS band_id, xxhash64({', '.join(f'm{b * r + i}' for i in range(r))}) AS band_hash)"
+        for b in range(NUM_PERM // r)
+    ))
+
+
+_PERM_MINS = _perm_mins()
+_BANDS = {r: _band_structs(r) for r in (1, 2)}  # the rows _lsh_params can pick
+# IF(..., 1, 0), not a bare comparison: a null column counts as disagreement.
+_AGREE = " + ".join(f"IF(a.m{i} = b.m{i}, 1, 0)" for i in range(NUM_PERM))
+# OPH: the low 7 bits of h64 pick one of NUM_PERM bins, the other 57 are the value.
+_OPH_BIN_V = (f"pmod(h64, {NUM_PERM}) AS bin", "shiftrightunsigned(h64, 7) AS v")
+_OPH_BINS = ", ".join(f"min(CASE WHEN bin = {i} THEN mv END) AS r{i}" for i in range(NUM_PERM))
+_OPH_RR = "concat(array({0}), array({0})) AS rr".format(", ".join(f"r{i}" for i in range(NUM_PERM)))
+_OPH_DENSE = ", ".join(
+    f"element_at(filter(slice(rr, {i + 1}, {NUM_PERM}), x -> x IS NOT NULL), 1) AS m{i}"
+    for i in range(NUM_PERM)
+)
+
+
 def exact_duplicate_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup: group by content hash; one row per distinct content with
     its canonical (minimum) id and copy count."""
@@ -124,22 +189,11 @@ def minhash_signatures(index: DataFrame) -> DataFrame:
     downstream comparison inside whole-stage codegen — higher-order array
     functions evaluate interpreted, measured 4x slower here. The groupBy
     does map-side partial min, so the shuffle carries one 128-value row per
-    doc regardless of shingle count."""
+    doc regardless of shingle count. The 128 aggregates go to the JVM
+    as one SQL select list (:data:`_PERM_MINS`); :func:`_perm_mins` says
+    why they are text and not Columns."""
     hashed = index.select("doc_id", F.xxhash64("sh").alias("h64"))
-    return hashed.groupBy("doc_id").agg(*_perm_mins())
-
-
-def _perm_mins() -> list[Column]:
-    """The 128 permutation min-aggregates over a 64-bit shingle hash
-    column ``h64`` (h32 = h64 mod 2^32 exactly as the string path always
-    hashed: pmod(xxhash64(sh), 2^32))."""
-    h32 = F.pmod(F.col("h64"), F.lit(1 << 32))
-    return [
-        F.min(
-            (F.lit(_PERM_A[i]) * h32 + F.lit(_PERM_B[i])) % F.lit(_MERSENNE_P)
-        ).alias(f"m{i}")
-        for i in range(NUM_PERM)
-    ]
+    return hashed.groupBy("doc_id").agg(_wide(_PERM_MINS)).select("doc_id", "_w.*")
 
 
 def _hashed_shingle_stream(
@@ -185,10 +239,16 @@ def _sig_payload(index_h: DataFrame) -> DataFrame:
     counted distinct shingle strings; an intra-doc xxhash64 collision
     (odds ~L²/2^64 ≈ 2e-13 per doc) would shrink it by one — the same
     accepted tolerance class as the hashed verify intersections
-    (~5e-15/pair), documented there since round 1."""
+    (~5e-15/pair), documented there since round 1.
+
+    The aggregates are one SQL select list (:data:`_PERM_MINS`). Built
+    from Columns they cost ~9k py4j calls, about 1 s of driver time per
+    build, which every streaming-dedup micro-batch paid before its first
+    task ran; as text the build is a few dozen calls."""
     return (
         index_h.groupBy("doc_id")
-        .agg(F.collect_set("h64").alias("hsh"), *_perm_mins())
+        .agg(_wide(f"collect_set(h64) AS hsh, {_PERM_MINS}"))
+        .select("doc_id", "_w.*")
         .withColumn("sz", F.size("hsh"))
     )
 
@@ -208,78 +268,11 @@ def _cand_pairs(buckets: DataFrame, min_bands: int) -> DataFrame:
     )
 
 
-def _est_verify(
-    cand: DataFrame,
-    payload: DataFrame,
-    est_cutoff: int,
-    threshold: float,
-    n_docs: int | None,
-    int_pred: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Signature-estimate cut, then exact verify, both sides projected
-    from ONE persisted payload frame (r10: the per-doc signature and
-    hashed-array frames used to be built and persisted separately; one
-    combined aggregation now feeds both join stages via column-pruned
-    projections of the same cache)."""
-    sig_a = payload.select(
-        F.col("doc_id").alias("doc_id_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(NUM_PERM)],
-    )
-    sig_b = payload.select(
-        F.col("doc_id").alias("doc_id_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(NUM_PERM)],
-    )
-    est = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(NUM_PERM)
-    )
-    # Join ORDER is load-bearing: the est joins see every candidate (4.2M
-    # at sf0.1) but carry only fixed-width signature columns; the hashed
-    # arrays (~1.5 KB/doc) join AFTER the estimate cut, so only the ~1-2%
-    # surviving pairs ever copy an array into a joined row.  A merged
-    # single-pass variant was measured 4-5x SLOWER here (the broadcast
-    # join materializes both arrays into every candidate row before the
-    # filter can kill it — 4.2M x 3 KB of memcpy).
-    survivors = (
-        cand.join(_doc_side(sig_a, n_docs), "doc_id_a")
-        .join(_doc_side(sig_b, n_docs), "doc_id_b")
-        .filter(est >= F.lit(est_cutoff))
-        .select("doc_id_a", "doc_id_b")
-    )
-    sh_a = payload.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("hsh").alias("sh_a"), F.col("sz").alias("sz_a")
-    )
-    sh_b = payload.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("hsh").alias("sh_b"), F.col("sz").alias("sz_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
-    if int_pred is None:
-        # unrounded float predicate, same expression as the oracle
-        keep = jac >= threshold
-    else:
-        # d12-family integer cross-multiplication (no float edge)
-        num, den = int_pred
-        keep = den * inter >= num * (F.col("sz_a") + F.col("sz_b") - inter)
-    return (
-        survivors.join(_doc_side(sh_a, n_docs), "doc_id_a")
-        .join(_doc_side(sh_b, n_docs), "doc_id_b")
-        .filter(keep)
-        .select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
-    )
-
-
 def _band_buckets(signatures: DataFrame, rows: int = 2) -> DataFrame:
-    r = rows
-    n_bands = NUM_PERM // r
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.xxhash64(*[F.col(f"m{b * r + i}") for i in range(r)]).alias("band_hash"),
-        )
-        for b in range(n_bands)
-    ])
-    return signatures.select("doc_id", F.explode(bands).alias("bk")).select(
-        "doc_id", F.col("bk.band_id").alias("band_id"), F.col("bk.band_hash").alias("band_hash")
+    """(doc_id, band_id, band_hash): one row per band of ``rows``
+    signature columns, band_hash = xxhash64 of the band's minima."""
+    return signatures.selectExpr("doc_id", _BANDS[rows]).select(
+        "doc_id", "bk.band_id", "bk.band_hash"
     )
 
 
@@ -399,7 +392,7 @@ def _payload_funnel(
     prepared (doc_id, hsh, sz, m0..m{NUM_PERM-1}) payload frame.
 
     The payload feeds FIVE consumers (banding, est sides a and b, and
-    both verify-side hsh/sz projections inside _est_verify — ADVICE r10
+    both verify-side hsh/sz projections in _verify_jaccard — ADVICE r10
     corrected the count) and is persisted: exchange reuse does NOT fire
     across the differently-projected consumers (measured round 1; the
     r10 restructure shrinks what gets persisted to ONE frame where the
@@ -410,7 +403,9 @@ def _payload_funnel(
     payload = payload.persist(StorageLevel.MEMORY_AND_DISK)
     n_docs = payload.count()  # materializes the persisted payload once
     cand = _cand_pairs(_band_buckets(payload, rows), min_bands)
-    return _est_verify(cand, payload, est_cutoff, threshold, n_docs, int_pred)
+    return _verify_jaccard(
+        _est_filter(cand, payload, est_cutoff, n_docs), payload, threshold, n_docs, int_pred
+    )
 
 
 def oph_signatures(index: DataFrame) -> DataFrame:
@@ -456,19 +451,12 @@ def _oph_signatures_hashed(index_h: DataFrame) -> DataFrame:
     (xxhash64 of the shingle string — identical values either way), so
     the codegen shingle stream feeds OPH without re-materializing
     strings."""
-    h = F.col("h64")
     partial = (
-        index_h.select(
-            "doc_id",
-            F.pmod(h, F.lit(NUM_PERM)).alias("bin"),
-            F.shiftrightunsigned(h, 7).alias("v"),  # drops the 7 bin bits
-        )
+        index_h.selectExpr("doc_id", *_OPH_BIN_V)
         .groupBy("doc_id", "bin")
         .agg(F.min("v").alias("mv"))
     )
-    raw = partial.groupBy("doc_id").agg(
-        *[F.min(F.when(F.col("bin") == i, F.col("mv"))).alias(f"r{i}") for i in range(NUM_PERM)]
-    )
+    raw = partial.groupBy("doc_id").agg(_wide(_OPH_BINS)).select("doc_id", "_w.*")
     return _oph_densify(raw)
 
 
@@ -477,25 +465,14 @@ def _oph_densify(raw: DataFrame, carry: list[str] | None = None) -> DataFrame:
     bin-min frame into the funnel's m0..m127 signature columns: m_i =
     first non-null among r_i, r_{i+1 mod NUM_PERM}, ... via slice+filter
     over a doubled array (interpreted higher-order ops, but over docs x
-    NUM_PERM elements only — off the shingle-mass hot path)."""
-    carry = carry or []
-    doubled = raw.select(
-        "doc_id",
-        *carry,
-        F.concat(
-            F.array(*[F.col(f"r{i}") for i in range(NUM_PERM)]),
-            F.array(*[F.col(f"r{i}") for i in range(NUM_PERM)]),
-        ).alias("rr"),
-    )
-    return doubled.select(
-        "doc_id",
-        *carry,
-        *[
-            F.element_at(
-                F.filter(F.slice("rr", i + 1, NUM_PERM), lambda x: x.isNotNull()), 1
-            ).alias(f"m{i}")
-            for i in range(NUM_PERM)
-        ],
+    NUM_PERM elements only — off the shingle-mass hot path). SQL text
+    (:data:`_OPH_DENSE`): as Columns, the 128 ``filter`` lambdas alone
+    were thousands of py4j calls per build."""
+    keep = ["doc_id", *(carry or [])]
+    return (
+        raw.select(*keep, F.expr(_OPH_RR))
+        .select(*keep, _wide(_OPH_DENSE))
+        .select(*keep, "_w.*")
     )
 
 
@@ -514,22 +491,13 @@ def _oph_payload(index_h: DataFrame) -> DataFrame:
     flatten(collect_list(hs)) IS the per-doc distinct hash set — no
     array_distinct, no join, no shingle-mass persist anywhere."""
     partial = (
-        index_h.select(
-            "doc_id",
-            F.pmod(F.col("h64"), F.lit(NUM_PERM)).alias("bin"),
-            F.shiftrightunsigned(F.col("h64"), 7).alias("v"),
-            "h64",
-        )
+        index_h.selectExpr("doc_id", *_OPH_BIN_V, "h64")
         .groupBy("doc_id", "bin")
         .agg(F.min("v").alias("mv"), F.collect_set("h64").alias("hs"))
     )
     raw = partial.groupBy("doc_id").agg(
-        *[
-            F.min(F.when(F.col("bin") == i, F.col("mv"))).alias(f"r{i}")
-            for i in range(NUM_PERM)
-        ],
-        F.flatten(F.collect_list("hs")).alias("hsh"),
-    )
+        _wide(f"{_OPH_BINS}, flatten(collect_list(hs)) AS hsh")
+    ).select("doc_id", "_w.*")
     return _oph_densify(raw, carry=["hsh"]).withColumn("sz", F.size("hsh"))
 
 
@@ -573,28 +541,39 @@ def _est_filter(
 ) -> DataFrame:
     """Signature-agreement estimate over candidate pairs: keep pairs whose
     128-column agreement >= est_cutoff (codegen'd comparisons, no text);
-    the cutoff comes from _lsh_params so it tracks the caller's threshold."""
-    sig_a = sigs.select(
-        F.col("doc_id").alias("doc_id_a"), *[F.col(f"m{i}").alias(f"a{i}") for i in range(NUM_PERM)]
-    )
-    sig_b = sigs.select(
-        F.col("doc_id").alias("doc_id_b"), *[F.col(f"m{i}").alias(f"b{i}") for i in range(NUM_PERM)]
-    )
-    est = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(NUM_PERM)
-    )
+    the cutoff comes from _lsh_params so it tracks the caller's threshold.
+    ``sigs`` is any per-doc frame with doc_id and m0..m127 (the persisted
+    payload included: the optimizer prunes the other columns from both
+    join sides). The 128-term sum is one SQL expression (:data:`_AGREE`)
+    over the two join sides aliased ``a`` and ``b``, where the Column
+    form spent ~17k py4j calls on renamed projections and the sum.
+
+    Join ORDER is load-bearing: the est joins see every candidate (4.2M
+    at sf0.1) but carry only fixed-width signature columns; the hashed
+    arrays (~1.5 KB/doc) join AFTER the estimate cut (_verify_jaccard),
+    so only the ~1-2% surviving pairs ever copy an array into a joined
+    row. A merged single-pass variant was measured 4-5x SLOWER here (the
+    broadcast join materializes both arrays into every candidate row
+    before the filter can kill it — 4.2M x 3 KB of memcpy)."""
+    side = _doc_side(sigs, n_docs)
     return (
-        cand.join(_doc_side(sig_a, n_docs), "doc_id_a")
-        .join(_doc_side(sig_b, n_docs), "doc_id_b")
-        .filter(est >= F.lit(est_cutoff))
+        cand.join(side.alias("a"), F.col("doc_id_a") == F.col("a.doc_id"))
+        .join(side.alias("b"), F.col("doc_id_b") == F.col("b.doc_id"))
+        .filter(F.expr(_AGREE) >= F.lit(est_cutoff))
         .select("doc_id_a", "doc_id_b")
     )
 
 
 def _verify_jaccard(
-    pairs: DataFrame, hashed: DataFrame, threshold: float, n_docs: int | None = None
+    pairs: DataFrame,
+    hashed: DataFrame,
+    threshold: float,
+    n_docs: int | None = None,
+    int_pred: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs on hashed shingle arrays."""
+    """Exact-Jaccard verification of candidate pairs on hashed shingle
+    arrays (doc_id, hsh, sz) — the payload frame itself in the batch
+    funnel, column-pruned per join side."""
     sh_a = hashed.select(
         F.col("doc_id").alias("doc_id_a"), F.col("hsh").alias("sh_a"), F.col("sz").alias("sz_a")
     )
@@ -603,10 +582,17 @@ def _verify_jaccard(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
+    if int_pred is None:
+        # unrounded float predicate, same expression as the oracle
+        keep = jac >= threshold
+    else:
+        # d12-family integer cross-multiplication (no float edge)
+        num, den = int_pred
+        keep = den * inter >= num * (F.col("sz_a") + F.col("sz_b") - inter)
     return (
         pairs.join(_doc_side(sh_a, n_docs), "doc_id_a")
         .join(_doc_side(sh_b, n_docs), "doc_id_b")
-        .filter(jac >= threshold)  # unrounded, same predicate as the oracle
+        .filter(keep)
         .select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
     )
 
@@ -716,7 +702,9 @@ def minhash_lsh_incremental(
 
     payload = corpus_pl.unionByName(new_pl)
     n_docs = corpus_pl.count() + new_pl.count()  # materializes both payloads
-    return _est_verify(cand, payload, est_cutoff, threshold, n_docs)
+    return _verify_jaccard(
+        _est_filter(cand, payload, est_cutoff, n_docs), payload, threshold, n_docs
+    )
 
 
 # --- Near-dup clustering (connected components) -----------------------------

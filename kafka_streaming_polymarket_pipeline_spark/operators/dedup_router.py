@@ -137,7 +137,7 @@ def token_set_lsh_pairs(
     # permutation mins are duplicate-insensitive), then the shared
     # band -> band-count -> merged est+verify tail with the d12 integer
     # predicate. Same pair set as the r09 shape; one corpus pass instead
-    # of two and two payload joins instead of four (see dedup._est_verify).
+    # of two and two payload joins instead of four (see dedup._payload_funnel).
     index_h = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("t"),

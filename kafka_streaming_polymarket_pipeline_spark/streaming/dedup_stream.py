@@ -173,13 +173,15 @@ def _table_is_flat(table_path: str) -> bool:
     return False
 
 
-def _index_parts(docs: DataFrame, threshold: float, n: int):
+def _index_parts(payload: DataFrame, threshold: float) -> tuple:
+    """Split a (doc_id, hsh, m0..m127, sz) payload into the index's
+    (sigs, buckets, hashed) frames."""
     rows, _, _ = D._lsh_params(threshold)
-    payload = D._sig_payload(D._hashed_shingle_stream(docs, "doc_id", "text", n))
-    sigs = payload.select("doc_id", *[f"m{i}" for i in range(D.NUM_PERM)])
-    buckets = D._band_buckets(payload, rows)
-    hashed = payload.select("doc_id", "hsh", "sz")
-    return sigs, buckets, hashed
+    return (
+        payload.drop("hsh", "sz"),
+        D._band_buckets(payload, rows),
+        payload.select("doc_id", "hsh", "sz"),
+    )
 
 
 def write_index_batch(
@@ -194,7 +196,9 @@ def write_index_batch(
     ``parts`` lets the caller pass the (sigs, buckets, hashed) frames it
     already computed for probing, so the signature stage — the expensive
     map pass — runs once per batch, not twice."""
-    sigs, buckets, hashed = parts or _index_parts(docs, threshold, n)
+    sigs, buckets, hashed = parts or _index_parts(
+        D._sig_payload(D._hashed_shingle_stream(docs, "doc_id", "text", n)), threshold
+    )
     # Layout constant pinned at creation; a legacy index (None) is never
     # pruned, so the modulus only shapes new batches' file counts there.
     m = _ensure_meta(index_path) or N_DOC_BUCKETS
@@ -261,7 +265,6 @@ def checkpointed_parts(new: DataFrame, threshold: float = 0.5, n: int = 5) -> tu
     row-local hash over the checkpointed rows."""
     from kafka_streaming_polymarket_pipeline_spark.operators.scale import fan_out_narrow
 
-    rows, _, _ = D._lsh_params(threshold)
     # A micro-batch arrives in maxFilesPerTrigger-many input splits, so
     # the payload aggregation — the expensive per-batch map stage — ran
     # on that many cores regardless of machine width (measured r11:
@@ -270,10 +273,7 @@ def checkpointed_parts(new: DataFrame, threshold: float = 0.5, n: int = 5) -> tu
     payload = D._sig_payload(
         D._hashed_shingle_stream(fan_out_narrow(new), "doc_id", "text", n)
     ).localCheckpoint(eager=True)
-    sigs = payload.select("doc_id", *[f"m{i}" for i in range(D.NUM_PERM)])
-    buckets = D._band_buckets(payload, rows)
-    hashed = payload.select("doc_id", "hsh", "sz")
-    return sigs, buckets, hashed
+    return _index_parts(payload, threshold)
 
 
 def incremental_pairs_against_index(
@@ -358,6 +358,57 @@ def incremental_pairs_against_index(
     return D._verify_jaccard(D._est_filter(cand, sigs, est_cutoff), hashed, threshold)
 
 
+def _holds_batch(index_path: str, batch_id: int) -> bool:
+    """True if an index table already has a ``batch=<batch_id>`` dir: the
+    batch is a replay of one whose index write began before a crash."""
+    return any(
+        fsio.exists(os.path.join(index_path, name, f"batch={batch_id}"))
+        for name in (SIGS, HASHED, BUCKETS)
+    )
+
+
+def _sink_batch(
+    batch: DataFrame, batch_id: int, index_path: str, pairs_path: str,
+    threshold: float, n: int,
+) -> None:
+    """One micro-batch of :func:`incremental_dedup_sink`: probe the index
+    for pairs touching the batch, write them, and extend the index."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    # No batch-level localCheckpoint (r11): the batch frame is scanned
+    # exactly once — by checkpointed_parts' payload aggregation — so
+    # materializing it first was a pure extra job per micro-batch
+    # (write_index_batch and the probe consume only ``parts``).
+    parts = checkpointed_parts(batch, threshold, n)
+    pairs = incremental_pairs_against_index(batch, index_path, threshold, n, parts=parts)
+
+    def write_pairs() -> None:
+        pairs.write.mode("overwrite").parquet(os.path.join(pairs_path, f"batch={batch_id}"))
+
+    def write_index() -> None:
+        # reuse the probed frames: the signature map pass runs once/batch
+        write_index_batch(batch, index_path, batch_id, threshold, n, parts=parts)
+
+    if _holds_batch(index_path, batch_id):
+        # A replay: the probe's file listing (taken when ``pairs`` was
+        # built) includes this batch's own index files, which
+        # write_index's per-dir overwrite deletes. Running the two
+        # together lets the pairs job hit deleted files and fail the
+        # batch again on every retry, so read first, then rewrite.
+        write_pairs()
+        write_index()
+        return
+    # First attempt: the probe read no file of this batch, and both
+    # writes land under their own batch=<id> dirs, so they are
+    # independent consumers of the checkpointed parts — run them
+    # concurrently so the index writes back-fill executors left idle by
+    # the pairs job's tail (guide §2.6). Each future re-raises into
+    # foreachBatch on failure, keeping the stream's retry semantics.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for fut in [pool.submit(write_pairs), pool.submit(write_index)]:
+            fut.result()
+
+
 def incremental_dedup_sink(
     docs_stream: DataFrame,
     index_path: str,
@@ -369,40 +420,10 @@ def incremental_dedup_sink(
     """Standing job: per micro-batch, emit near-dup pairs touching the
     batch (probing the persistent index), then extend the index. Pairs
     land under batch=<id> dirs (overwrite -> idempotent on retry)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from kafka_streaming_polymarket_pipeline_spark.sources.sinks import foreach_batch_sink
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        # No batch-level localCheckpoint (r11): the batch frame is
-        # scanned exactly once — by checkpointed_parts' payload
-        # aggregation — so materializing it first was a pure extra job
-        # per micro-batch (write_index_batch and the probe consume only
-        # ``parts``).
-        parts = checkpointed_parts(batch, threshold, n)
-        pairs = incremental_pairs_against_index(
-            batch, index_path, threshold, n, parts=parts
-        )
-
-        def write_pairs() -> None:
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(pairs_path, f"batch={batch_id}")
-            )
-
-        def write_index() -> None:
-            # reuse the probed frames: the signature map pass runs once/batch
-            write_index_batch(batch, index_path, batch_id, threshold, n, parts=parts)
-
-        # The pairs write and the index extension are INDEPENDENT
-        # consumers of the checkpointed parts (both land under their own
-        # batch=<id> dir with per-dir overwrite, so retry idempotency is
-        # order-free) — submit them concurrently so the index writes
-        # back-fill executors left idle by the pairs job's tail
-        # (guide §2.6). Each future re-raises into foreachBatch on
-        # failure, keeping the stream's retry semantics.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(write_pairs), pool.submit(write_index)]:
-                fut.result()
+        _sink_batch(batch, batch_id, index_path, pairs_path, threshold, n)
 
     return foreach_batch_sink(docs_stream, process, checkpoint)
 

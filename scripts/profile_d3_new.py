@@ -36,7 +36,7 @@ n_docs = tic("P1_payload_persist_count", lambda: payload.count())
 rows, min_bands, est_cutoff = D._lsh_params(0.5)
 cand = D._cand_pairs(D._band_buckets(payload, rows), min_bands)
 tic("P2_cand_noop", lambda: cand.write.format("noop").mode("overwrite").save())
-out = D._est_verify(cand, payload, est_cutoff, 0.5, n_docs)
+out = D._verify_jaccard(D._est_filter(cand, payload, est_cutoff, n_docs), payload, 0.5, n_docs)
 tic("P3_est_verify_noop", lambda: out.write.format("noop").mode("overwrite").save())
 tic("P3b_est_verify_again", lambda: out.write.format("noop").mode("overwrite").save())
 spark.stop()

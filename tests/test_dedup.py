@@ -293,3 +293,132 @@ def test_hamming_hex_expression(spark):
     df = spark.createDataFrame([("f0f0", "0f0f"), ("abcd", "abcd")], "a string, b string")
     got = [r[0] for r in df.select(D.hamming_hex(F.col("a"), F.col("b"))).collect()]
     assert got == [16, 0]
+
+
+WORDS = (
+    "stream batch window watermark shuffle join sort merge hash bucket "
+    "partition index probe sketch signature band shingle"
+).split()
+
+
+@pytest.fixture(scope="module")
+def seeded_stream(spark):
+    """A seeded (doc_id, h64) shingle-hash stream and, per doc, the set of
+    its hashes as collected from that stream. Doc lengths run from fewer
+    shingles than OPH bins (empty bins to densify) to a few hundred."""
+    import random
+
+    rng = random.Random(11)
+    docs = [
+        (i, " ".join(rng.choice(WORDS) for _ in range(rng.randint(2, 60))))
+        for i in range(8)
+    ]
+    stream = D._hashed_shingle_stream(
+        spark.createDataFrame(docs, "doc_id long, text string"), "doc_id", "text", 5
+    )
+    hashes: dict[int, set[int]] = {}
+    for r in stream.collect():
+        hashes.setdefault(r["doc_id"], set()).add(r["h64"])
+    return stream, hashes
+
+
+def _sig(row) -> list[int]:
+    return [row[f"m{i}"] for i in range(D.NUM_PERM)]
+
+
+def _minhash_reference(hs: set[int]) -> list[int]:
+    """m_i = min over the doc's distinct hashes of
+    (a_i * (h64 mod 2^32) + b_i) mod P, in Python integers."""
+    return [
+        min((a * (h % (1 << 32)) + b) % D._MERSENNE_P for h in hs)
+        for a, b in zip(D._PERM_A, D._PERM_B)
+    ]
+
+
+def test_sig_payload_matches_python_reference(seeded_stream):
+    """The payload's signature, hash set and size against a Python
+    reference over the collected stream. Guards the SQL text's literal
+    types and operator precedence, which the exact-Jaccard pair oracles
+    would only catch if a pair flipped."""
+    stream, hashes = seeded_stream
+    want = {doc: _minhash_reference(hs) for doc, hs in hashes.items()}
+    rows = D._sig_payload(stream).collect()
+    assert {r["doc_id"]: _sig(r) for r in rows} == want
+    assert {r["doc_id"]: (r["sz"], set(r["hsh"])) for r in rows} == {
+        doc: (len(hs), hs) for doc, hs in hashes.items()
+    }
+
+
+def test_minhash_signatures_match_python_reference(planted):
+    """The string-index path: the same permutation minima over
+    xxhash64 of each distinct shingle string."""
+    idx = D.shingle_index(planted)
+    hashes: dict[int, set[int]] = {}
+    for r in idx.select("doc_id", F.xxhash64("sh").alias("h64")).collect():
+        hashes.setdefault(r["doc_id"], set()).add(r["h64"])
+    want = {doc: _minhash_reference(hs) for doc, hs in hashes.items()}
+    assert {r["doc_id"]: _sig(r) for r in D.minhash_signatures(idx).collect()} == want
+
+
+def _oph_reference(hs: set[int]) -> list[int]:
+    """Per-bin min of the unsigned value bits, then rotation densification:
+    an empty bin takes the nearest non-empty bin to its right, circularly."""
+    n = D.NUM_PERM
+    bins: list[int | None] = [None] * n
+    for h in hs:
+        b, v = h % n, (h & ((1 << 64) - 1)) >> 7
+        bins[b] = v if bins[b] is None else min(bins[b], v)
+    return [
+        next(bins[(i + k) % n] for k in range(n) if bins[(i + k) % n] is not None)
+        for i in range(n)
+    ]
+
+
+def test_oph_densify_matches_python_rotation(seeded_stream):
+    stream, hashes = seeded_stream
+    want = {doc: _oph_reference(hs) for doc, hs in hashes.items()}
+    assert any(len(hs) < D.NUM_PERM for hs in hashes.values())  # some bins borrow
+    payload = D._oph_payload(stream).collect()
+    assert {r["doc_id"]: _sig(r) for r in payload} == want
+    assert {r["doc_id"]: (r["sz"], set(r["hsh"])) for r in payload} == {
+        doc: (len(hs), hs) for doc, hs in hashes.items()
+    }
+    sigs = D._oph_signatures_hashed(stream).collect()
+    assert {r["doc_id"]: _sig(r) for r in sigs} == want
+
+
+def test_wide_builders_stay_within_gateway_call_budget(spark, monkeypatch):
+    """Building each NUM_PERM-wide operator must stay a handful of py4j
+    round trips: the expressions go to the JVM as SQL text. Assembled one
+    Column at a time they cost 5k-24k calls (seconds of driver time per
+    streaming micro-batch); this fails if a builder goes back to that."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    one = spark.createDataFrame([(1, 7)], "doc_id long, h64 long")
+    cand = spark.createDataFrame([(1, 2)], "doc_id_a long, doc_id_b long")
+    payload = D._sig_payload(one)
+    builders = {
+        "_sig_payload": lambda: D._sig_payload(one),
+        "_band_buckets": lambda: D._band_buckets(payload),
+        "_est_filter": lambda: D._est_filter(cand, payload, 38),
+        "_oph_payload": lambda: D._oph_payload(one),
+    }
+    builder_thread = threading.get_ident()
+    n = [0]
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        # py4j's finalizer thread releases dead JVM references on its own
+        # schedule; those releases are not calls the build makes
+        n[0] += threading.get_ident() == builder_thread
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    calls = {}
+    for name, build in builders.items():
+        n[0] = 0
+        build()
+        calls[name] = n[0]
+    monkeypatch.undo()
+    assert max(calls.values()) <= 300, calls

@@ -159,6 +159,7 @@ def test_x8_is_take_ordered_no_shuffle(spark, sf_smoke):
     assert "TakeOrderedAndProject" in p
     assert "Exchange rangepartitioning" not in p
     assert "Exchange hashpartitioning" not in p
+    assert "Exchange SinglePartition" not in p  # no CollectLimit / global sort
     assert "Window" not in p
 
 

@@ -235,6 +235,54 @@ def test_retry_after_index_write_emits_no_self_pairs(spark, tmp_path):
     assert all(a != b for a, b, _ in retried)
     assert retried == original and original
 
+
+def test_replayed_batch_writes_pairs_before_index(spark, tmp_path, monkeypatch):
+    """A replayed batch (its batch=<id> index dirs already exist: the crash
+    came after the index write began, before the stream checkpoint) must
+    finish the pairs write before write_index_batch overwrites its index
+    dirs: the probe's file listing includes those files, and a concurrent
+    overwrite deletes them under the running pairs job. A first attempt
+    keeps the two writes concurrent on the pool threads."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    idx, pairs_path = str(tmp_path / "idx"), str(tmp_path / "pairs")
+    batch = spark.createDataFrame(BATCH_A + BATCH_B, "doc_id long, text string")
+    spans = []  # (write, thread name, start, end)
+    write_index, parquet = DS.write_index_batch, DataFrameWriter.parquet
+
+    def timed(name, fn, *args, **kwargs):
+        t0 = time.perf_counter()
+        fn(*args, **kwargs)
+        spans.append((name, threading.current_thread().name, t0, time.perf_counter()))
+
+    def timed_parquet(self, path, *args, **kwargs):
+        if str(path).startswith(pairs_path):
+            timed("pairs", parquet, self, path, *args, **kwargs)
+        else:
+            parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DS, "write_index_batch", lambda *a, **k: timed("index", write_index, *a, **k))
+    monkeypatch.setattr(DataFrameWriter, "parquet", timed_parquet)
+
+    def pairs_of_batch0():
+        rows = spark.read.parquet(f"{pairs_path}/batch=0").collect()
+        return {(r["doc_id_a"], r["doc_id_b"], r["jaccard"]) for r in rows}
+
+    DS._sink_batch(batch, 0, idx, pairs_path, 0.5, 5)
+    assert sorted(s[0] for s in spans) == ["index", "pairs"]
+    assert all(s[1] != threading.current_thread().name for s in spans)  # pool threads
+    original = pairs_of_batch0()
+
+    spans.clear()
+    DS._sink_batch(batch, 0, idx, pairs_path, 0.5, 5)  # the replay
+    (pairs,) = [s for s in spans if s[0] == "pairs"]
+    (index,) = [s for s in spans if s[0] == "index"]
+    assert pairs[3] <= index[2], "replay overlapped the pairs and index writes"
+    assert pairs_of_batch0() == original and original
+
+
 @pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
 def test_compact_index_preserves_probes_and_shrinks_files(spark, tmp_path):
     """Offline compaction merges all batch dirs into one per table:
@@ -415,7 +463,8 @@ def test_flat_legacy_table_stays_flat_and_probes_keep_working(spark, tmp_path):
     idx = str(tmp_path / "idx")
     a = spark.createDataFrame(BATCH_A, "doc_id long, text string")
     # hand-build the legacy layout: flat batch dirs, no meta
-    sigs, buckets, hashed = DS._index_parts(a, 0.5, 5)
+    payload = D._sig_payload(D._hashed_shingle_stream(a, "doc_id", "text", 5))
+    sigs, buckets, hashed = DS._index_parts(payload, 0.5)
     for name, part in ((DS.SIGS, sigs), (DS.HASHED, hashed), (DS.BUCKETS, buckets)):
         part.coalesce(1).write.parquet(os.path.join(idx, name, "batch=0"))
     assert DS._table_is_flat(os.path.join(idx, DS.HASHED))
