@@ -15,13 +15,58 @@ import time
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_GIB = 48
+_CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def host_memory_bytes(cgroup_memory_max: str = _CGROUP_MEMORY_MAX) -> int | None:
+    """Physical memory this process can use: ``os.sysconf``'s total, or the
+    cgroup v2 ``memory.max`` limit when that is lower. None if neither is
+    readable."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        total = None
+    try:
+        with open(cgroup_memory_max) as fh:
+            limit = int(fh.read().strip())  # "max" (no limit) raises ValueError
+        total = limit if total is None else min(total, limit)
+    except (OSError, ValueError):
+        pass
+    return total
+
+
+def driver_memory(env=os.environ, host_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a local session: ``SPARK_DRIVER_MEM`` if
+    set, else half of ``host_bytes`` (default: ``host_memory_bytes()``)
+    rounded down to whole GiB, at least 1g and at most 48g.
+
+    Local mode runs every task inside the driver JVM, so its heap ceiling is
+    the whole engine's. A ceiling the host cannot back lets G1 grow the heap
+    past physical memory instead of collecting, and the kernel OOM-kills the
+    JVM; half leaves room for off-heap, metaspace and the Python workers."""
+    explicit = env.get("SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    if host_bytes is None:
+        host_bytes = host_memory_bytes()
+    if host_bytes is None:
+        return f"{_DRIVER_MEM_CAP_GIB}g"
+    return f"{max(1, min(host_bytes // 2 // 2**30, _DRIVER_MEM_CAP_GIB))}g"
+
 
 def get_spark(
     app_name: str = "kafka_streaming_polymarket_pipeline_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local SparkSession with scale-sane defaults."""
+    """Build (or reuse) a local SparkSession with scale-sane defaults.
+
+    The driver heap is ``driver_memory()``: ``SPARK_DRIVER_MEM`` when set,
+    else half of the host's physical memory (or of a lower cgroup v2
+    ``memory.max``), rounded down to whole GiB and capped at 48g, so a
+    15.7 GiB host gets 7g and a host with 96 GiB or more keeps 48g.
+    """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -35,7 +80,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
