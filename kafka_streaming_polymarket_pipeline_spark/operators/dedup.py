@@ -18,17 +18,23 @@ Five families, each designed partition-parallel for 100 TB:
   ``array<float>`` column (brute pairs here; the LSH-bucketed scale path is
   operators/similarity.py).
 
-Everything is built-in-function Spark (no Python UDFs): higher-order
-array ops for shingles/signatures, joins + aggregates for pair math.
+Everything is built-in-function Spark except one kernel: higher-order
+array ops for shingles, joins + aggregates for pair math, and the MinHash
+payload (signature + hash set per doc) as a numpy fold over Arrow batches
+inside the shingle stage (:func:`_fold_payload`).
 """
 
 from __future__ import annotations
 
 import os
 import random
+import sys
+from collections.abc import Callable
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
 from kafka_streaming_polymarket_pipeline_spark.operators.text import char_shingles
 
@@ -170,17 +176,6 @@ def ngram_jaccard_pairs(
     return _jaccard_from_index(shingle_index(df, id_col, text_col, n), threshold)
 
 
-def doc_shingle_arrays(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5
-) -> DataFrame:
-    """(doc_id, shingles array, sz): the per-doc distinct shingle *array* —
-    map-only, no explode/shuffle; the unit all LSH stages operate on."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        char_shingles(F.col(text_col), n).alias("shingles"),
-    ).withColumn("sz", F.size("shingles")).filter(F.col("sz") > 0)
-
-
 def minhash_signatures(index: DataFrame) -> DataFrame:
     """Per-doc MinHash signature: 128 columns m0..m127, each the min over the
     doc's shingles of (a_i*h + b_i) mod p.
@@ -199,41 +194,205 @@ def minhash_signatures(index: DataFrame) -> DataFrame:
 def _hashed_shingle_stream(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """(doc_id, h64): one row per shingle OCCURRENCE (multiset — consumers
-    dedupe via min/collect_set), hashed with xxhash64 over the n-char
-    substring. Whole-stage-codegen explode+substring+hash — the r10
-    optimization replacing the interpreted transform(sequence)+
-    array_distinct(string array) path, which materialized every shingle
-    STRING per doc before hashing (guide §4.1: built-ins beat interpreted
-    higher-order lambdas; measured v0 5.9 s -> v4 5.2 s for the combined
-    agg at sf0.1, and the string-array pass it replaces cost another
-    ~4 s). The length guard keeps sequence() ascending (an L<n doc would
-    otherwise generate a DESCENDING [1,0] range)."""
+    """(doc_id, _p, h64): one row per shingle OCCURRENCE (multiset —
+    consumers dedupe), hashed with xxhash64 over the n-char substring
+    that starts at 0-based offset ``_p``. Whole-stage-codegen
+    explode+substring+hash — the r10 optimization replacing the
+    interpreted transform(sequence)+array_distinct(string array) path,
+    which materialized every shingle STRING per doc before hashing
+    (guide §4.1: built-ins beat interpreted higher-order lambdas). The
+    Generate emits one document's rows consecutively, starting at
+    ``_p = 0``, which is what :func:`_fold_payload` relies on. The length
+    guard keeps sequence() ascending (an L<n doc would otherwise generate
+    a DESCENDING [0,-1] range)."""
     return (
         df.filter(F.length(F.col(text_col)) >= n)
         .select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("_t"),
-            F.explode(
-                F.sequence(F.lit(1), F.length(F.col(text_col)) - (n - 1))
-            ).alias("_i"),
+            F.explode(F.sequence(F.lit(0), F.length(F.col(text_col)) - n)).alias("_p"),
         )
-        .select("doc_id", F.xxhash64(F.expr(f"substring(_t, _i, {n})")).alias("h64"))
+        .select("doc_id", "_p", F.xxhash64(F.expr(f"substring(_t, _p + 1, {n})")).alias("h64"))
     )
+
+
+def _fold_payload(
+    docs: DataFrame, id_col: str, stream: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """The funnel payload (doc_id, hsh, m0..m127, sz) of every document
+    that ``stream`` generates hash rows for, without a shuffle after the
+    Generate and without an aggregation.
+
+    ``stream`` maps a document frame to its (doc_id, _p, h64) Generate:
+    one row per hashed shingle or token, a document's rows consecutive
+    and the first at ``_p = 0`` (:func:`_hashed_shingle_stream`, the
+    router's token stream). The documents are hash-partitioned on
+    ``id_col`` first, with an explicit count (the session's default
+    parallelism) so AQE cannot coalesce a small batch back to one task,
+    and so every row of a doc_id sits in one partition. A ``mapInArrow``
+    fold (:func:`_payload_fold`) then reduces each document's segment to
+    its 128 permutation minima, its sorted distinct hash set and its
+    size, carrying a document that straddles two Arrow batches.
+
+    Same rows as ``_sig_payload(stream)``, except that ``hsh`` is sorted
+    (every consumer treats it as a set). Where the grouped payload merged
+    repeated doc_ids silently, the fold raises on a null doc_id or on a
+    doc_id that starts a second segment: the funnel's pairs are only
+    meaningful over unique ids."""
+    from functools import partial
+
+    parts = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+    rows = stream(parts)
+    # the grouped _sig_payload's types and nullability
+    schema = StructType(
+        [
+            rows.schema["doc_id"],
+            StructField("hsh", ArrayType(LongType(), False), False),
+            *(StructField(f"m{i}", LongType()) for i in range(NUM_PERM)),
+            StructField("sz", IntegerType(), False),
+        ]
+    )
+    return rows.mapInArrow(partial(_payload_fold, schema), schema)
+
+
+def _shingle_payload(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """:func:`_fold_payload` over the character n-gram stream: the payload
+    of d3, d7, d13, d18 and the streaming-dedup batches."""
+    return _fold_payload(
+        df, id_col, lambda docs: _hashed_shingle_stream(docs, id_col, text_col, n)
+    )
+
+
+# The payload kernel runs on the Python workers. Pickled by value, it needs
+# only numpy, pyarrow and pyspark there, not this package on their path.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _payload_fold(schema: StructType, batches):
+    """The :func:`_fold_payload` kernel, run on the Python workers over one
+    partition's (doc_id, _p, h64) Arrow batches.
+
+    Per batch: segment starts are the ``_p == 0`` rows;
+    ``np.minimum.reduceat`` over the 128 x rows matrix
+    ``(a_i * (h64 mod 2^32) + b_i) mod P`` gives each segment's minima
+    (int64-exact: a_i < 2^30 and h32 < 2^32, so every term is below
+    2^63); one lexsort by (segment, hash) and a neighbour compare give
+    each segment's distinct hashes. A batch whose first row has
+    ``_p != 0`` continues the previous batch's last document, so that
+    document is held back (its minima and distinct hashes so far) until
+    the next segment starts or the partition ends."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out_schema = to_arrow_schema(schema)
+    hsh_type = out_schema.field("hsh").type
+    perm_a = np.array(_PERM_A, dtype=np.int64)[:, None]
+    perm_b = np.array(_PERM_B, dtype=np.int64)[:, None]
+
+    def emit(ids, mins, offsets, values):
+        return pa.RecordBatch.from_arrays(
+            [
+                ids,
+                pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(values), type=hsh_type),
+                *(pa.array(m) for m in mins),
+                pa.array(np.diff(offsets).astype(np.int32)),
+            ],
+            schema=out_schema,
+        )
+
+    def emit_carried(open_doc):
+        ids, mins, hashes = open_doc
+        values = np.unique(np.concatenate(hashes))
+        return emit(ids, mins[:, None], np.array([0, len(values)]), values)
+
+    open_doc = None  # (doc_id slice, minima so far, [distinct hash arrays])
+    starts_seen = []
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        ids = batch.column("doc_id")
+        if ids.null_count:
+            raise ValueError("MinHash payload: null doc_id")
+        p = batch.column("_p").to_numpy()
+        h = batch.column("h64").to_numpy()
+        is_start = p == 0
+        cont = not is_start[0]
+        if cont and open_doc is None:
+            raise RuntimeError(
+                "MinHash payload: a partition's first shingle row is not a "
+                "document start; the hash stream is not doc-contiguous"
+            )
+        if n > 1:
+            changed = pc.not_equal(ids.slice(1), ids.slice(0, n - 1)).to_numpy(zero_copy_only=False)
+            if np.any(changed & ~is_start[1:]):
+                raise RuntimeError(
+                    "MinHash payload: doc_id changes inside a document's "
+                    "rows; the hash stream is not doc-contiguous"
+                )
+        bounds = np.flatnonzero(is_start)
+        starts_seen.append(ids.take(pa.array(bounds)))
+        if cont:
+            bounds = np.concatenate(([0], bounds))
+            if ids[0] != open_doc[0][0]:
+                raise RuntimeError(
+                    "MinHash payload: a batch continues a different document "
+                    "than the one the previous batch left open"
+                )
+        seg = np.cumsum(is_start) - (0 if cont else 1)
+        mins = np.minimum.reduceat((perm_a * (h & 0xFFFFFFFF) + perm_b) % _MERSENNE_P, bounds, axis=1)
+        order = np.lexsort((h, seg))
+        hs, ss = h[order], seg[order]
+        keep = np.ones(n, dtype=bool)
+        keep[1:] = (hs[1:] != hs[:-1]) | (ss[1:] != ss[:-1])
+        values = hs[keep]
+        offsets = np.zeros(len(bounds) + 1, dtype=np.int64)
+        np.cumsum(np.bincount(ss[keep], minlength=len(bounds)), out=offsets[1:])
+
+        first, last = int(cont), len(bounds) - 1
+        if cont:
+            open_doc[1][:] = np.minimum(open_doc[1], mins[:, 0])
+            open_doc[2].append(values[offsets[0]:offsets[1]])
+            if last == 0:
+                continue  # the whole batch continues the open document
+            yield emit_carried(open_doc)
+        elif open_doc is not None:
+            yield emit_carried(open_doc)
+        if last > first:
+            lo, hi = offsets[first], offsets[last]
+            yield emit(
+                ids.take(pa.array(bounds[first:last])),
+                mins[:, first:last],
+                offsets[first:last + 1] - lo,
+                values[lo:hi],
+            )
+        open_doc = (
+            ids.slice(bounds[last], 1),
+            mins[:, last].copy(),
+            [values[offsets[last]:offsets[last + 1]]],
+        )
+    if open_doc is not None:
+        yield emit_carried(open_doc)
+    if starts_seen:
+        started = pa.concat_arrays(starts_seen)
+        if len(pc.unique(started)) != len(started):
+            counts = pc.value_counts(started)
+            repeated = counts.filter(pc.greater(counts.field("counts"), 1)).field("values")
+            raise ValueError(
+                f"MinHash payload: doc_id {repeated[0]} names more than one "
+                "document; the payload needs unique doc_ids"
+            )
 
 
 def _sig_payload(index_h: DataFrame) -> DataFrame:
     """ONE aggregation producing everything the funnel consumes per doc:
-    (doc_id, hsh = distinct shingle-hash set, sz = |hsh|, m0..m127).
-
-    This is the r10 single-pass restructure: the funnel previously ran
-    TWO full shingle passes over the corpus — one exploded pass for the
-    128-permutation signature aggregation and one array-materializing
-    pass for the verify-side hashed shingle arrays (guide §1.2: remove
-    whole passes before tuning inside them). Both were the measured
-    Ω(shingle-mass) floor; one combined groupBy now computes signatures
-    AND verify arrays from a single codegen shingle stream (measured at
-    sf0.1: 5.2 s replacing 5.9 s + 4.2 s of separate stages).
+    (doc_id, hsh = distinct shingle-hash set, m0..m127, sz = |hsh|), for a
+    (doc_id, h64) stream in any row order. Its one caller is d3c, whose
+    stream comes out of a shingle join and so is not doc-contiguous;
+    every stream that comes straight from a Generate over a document
+    frame takes the shuffle-free :func:`_fold_payload` instead.
 
     ``sz`` counts DISTINCT 64-bit shingle hashes where the old path
     counted distinct shingle strings; an intra-doc xxhash64 collision
@@ -243,8 +402,7 @@ def _sig_payload(index_h: DataFrame) -> DataFrame:
 
     The aggregates are one SQL select list (:data:`_PERM_MINS`). Built
     from Columns they cost ~9k py4j calls, about 1 s of driver time per
-    build, which every streaming-dedup micro-batch paid before its first
-    task ran; as text the build is a few dozen calls."""
+    build; as text the build is a few dozen calls."""
     return (
         index_h.groupBy("doc_id")
         .agg(_wide(f"collect_set(h64) AS hsh, {_PERM_MINS}"))
@@ -362,13 +520,15 @@ def minhash_lsh_dedup(
     true Jaccard. Output equals ngram_jaccard_pairs; no shingle-index
     self-join ever materializes.
 
-    Physical notes (r10 restructure, guide §1.2/§2.4): ONE codegen
-    shingle-hash stream (explode+substring+xxhash64 — no interpreted
-    transform/array_distinct string pass) feeds ONE combined payload
-    aggregation producing signatures AND verify arrays per doc — the
-    r09 shape ran the Ω(shingle-mass) pass twice and persisted two
-    frames (measured at sf0.1: 5.2 s for the combined agg vs
-    5.9 s + 4.2 s separate).  The band-count aggregation still shuffles
+    Physical notes (guide §1.2/§2.4): the documents are hash-partitioned
+    on doc_id (the payload's only Exchange), then ONE codegen
+    shingle-hash stream (explode+substring+xxhash64) feeds a map-local
+    Arrow fold (:func:`_fold_payload`) that reduces each document's
+    consecutive rows to its signature AND verify array inside the same
+    stage — no shuffle after the Generate and no 128-min aggregation
+    (one 200-doc streaming batch, local[4]: payload jobs 2.3 s grouped
+    vs 0.6 s folded).  The
+    band-count aggregation shuffles
     only (doc_id_a, doc_id_b) pairs (25M bucket-co-occurrence rows ->
     4.2M candidates at sf0.1).  The est+verify stages merged into one
     pass over the payload (two joins, not four); est kills ~98% of
@@ -380,16 +540,17 @@ def minhash_lsh_dedup(
     broadcast at bench scale; above BROADCAST_VERIFY_MAX_DOCS the joins
     flip to shuffle-hash on doc_id — still candidate-local work.
     """
-    return _payload_funnel(
-        _sig_payload(_hashed_shingle_stream(df, id_col, text_col, n)), threshold
-    )
+    return _payload_funnel(_shingle_payload(df, id_col, text_col, n), threshold)
 
 
 def _payload_funnel(
     payload: DataFrame, threshold: float, int_pred: tuple[int, int] | None = None
 ) -> DataFrame:
     """The shared band -> band-count -> merged est+verify funnel over a
-    prepared (doc_id, hsh, sz, m0..m{NUM_PERM-1}) payload frame.
+    prepared (doc_id, hsh, m0..m{NUM_PERM-1}, sz) payload frame: the
+    fold's (:func:`_fold_payload`) for d3/d13/d18 and the router's LSH
+    leg, the grouped :func:`_sig_payload` for d3c, :func:`_oph_payload`
+    for d3d.
 
     The payload feeds FIVE consumers (banding, est sides a and b, and
     both verify-side hsh/sz projections in _verify_jaccard — ADVICE r10
@@ -520,20 +681,6 @@ def minhash_lsh_dedup_oph(
     return _payload_funnel(
         _oph_payload(_hashed_shingle_stream(df, id_col, text_col, n)), threshold
     )
-
-
-def _hashed_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """Persisted (doc_id, hashed-shingle array, sz) for the verify stage.
-    64-bit hashes, not strings: same intersection counts (cross-collision
-    odds ~|A||B|/2^64 ~ 5e-15 per pair) at a fraction of the comparison
-    cost, and the cached rows are ~6x smaller."""
-    from pyspark.storagelevel import StorageLevel
-
-    return doc_shingle_arrays(df, id_col, text_col, n).select(
-        "doc_id",
-        F.transform("shingles", lambda s: F.xxhash64(s)).alias("hsh"),
-        "sz",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _est_filter(
@@ -671,12 +818,8 @@ def minhash_lsh_incremental(
     from pyspark.storagelevel import StorageLevel
 
     rows, min_bands, est_cutoff = _lsh_params(threshold)
-    corpus_pl = _sig_payload(
-        _hashed_shingle_stream(corpus, id_col, text_col, n)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    new_pl = _sig_payload(
-        _hashed_shingle_stream(new, id_col, text_col, n)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    corpus_pl = _shingle_payload(corpus, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
+    new_pl = _shingle_payload(new, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
     corpus_buckets = _band_buckets(corpus_pl, rows)
     new_buckets = _band_buckets(new_pl, rows)
 
@@ -1763,10 +1906,11 @@ def paragraph_neardup_dedup(
     # d18 25.0 s -> 29.2 s at sf0.1 (min-of-2, same box/protocol) with
     # the restructured _oph_payload, vs d3d's 22.7 -> 17.5 s gain on
     # doc grain. At window grain the per-group state is small (~150
-    # chars/window), so _sig_payload's ONE combined groupBy beats OPH's
-    # two aggregation levels: the extra (wid, bin)-grain shuffle +
-    # ObjectHashAggregate outweighs replacing 128 multiply-mods/shingle
-    # with one hash. Kept on the single-pass exact funnel.
+    # chars/window), so the then-grouped _sig_payload's ONE groupBy beat
+    # OPH's two aggregation levels: the extra (wid, bin)-grain shuffle +
+    # ObjectHashAggregate outweighed replacing 128 multiply-mods/shingle
+    # with one hash. Kept on the exact funnel, whose payload is now the
+    # shuffle-free fold (_fold_payload).
     pairs = minhash_lsh_dedup(wdocs, threshold=threshold, n=n)
     labels = neardup_clusters_star(wdocs, pairs).select(
         F.col("doc_id").alias("wid"), "cluster_id"

@@ -132,18 +132,20 @@ def token_set_lsh_pairs(
     LSH family always carries."""
     from kafka_streaming_polymarket_pipeline_spark.operators.text import tokens
 
-    # r10 physical shape: one codegen token-hash stream into the funnel's
-    # combined payload aggregation (collect_set dedups the multiset, the
-    # permutation mins are duplicate-insensitive), then the shared
-    # band -> band-count -> merged est+verify tail with the d12 integer
-    # predicate. Same pair set as the r09 shape; one corpus pass instead
-    # of two and two payload joins instead of four (see dedup._payload_funnel).
-    index_h = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("t"),
-    ).select("doc_id", F.xxhash64("t").alias("h64"))
+    # One codegen token-hash stream (posexplode: a doc's tokens in order,
+    # the first at _p = 0) into the funnel's map-local payload fold (the
+    # fold dedups the multiset, the permutation mins are
+    # duplicate-insensitive), then the shared band -> band-count ->
+    # merged est+verify tail with the d12 integer predicate (see
+    # dedup._fold_payload and dedup._payload_funnel).
+    def token_stream(parts):
+        return parts.select(
+            F.col(id_col).alias("doc_id"),
+            F.posexplode(tokens(F.lower(F.col(text_col)))).alias("_p", "t"),
+        ).select("doc_id", "_p", F.xxhash64("t").alias("h64"))
+
     return D._payload_funnel(
-        D._sig_payload(index_h), num / den, int_pred=(num, den)
+        D._fold_payload(docs, id_col, token_stream), num / den, int_pred=(num, den)
     )
 
 

@@ -7,7 +7,11 @@ index: the corpus's band buckets and hashed shingle arrays live as
 parquet tables that each micro-batch probes and then extends. Per batch
 the work is:
 
-  1. signature + band computation for the new docs only (map-side);
+  1. signature + band computation for the new docs only: the batch is
+     hash-partitioned on doc_id, then one map-local Arrow fold over its
+     shingle-hash Generate builds the payload (operators/dedup
+     ``_shingle_payload``; no shuffle or aggregation after the
+     Generate);
   2. bucket probes: new-batch bands equi-join the stored bucket table
      (plus new-new pairs) -> band-count cut -> signature-agreement
      estimate cut -> exact hashed-shingle verify — the same
@@ -197,7 +201,7 @@ def write_index_batch(
     already computed for probing, so the signature stage — the expensive
     map pass — runs once per batch, not twice."""
     sigs, buckets, hashed = parts or _index_parts(
-        D._sig_payload(D._hashed_shingle_stream(docs, "doc_id", "text", n)), threshold
+        D._shingle_payload(docs, "doc_id", "text", n), threshold
     )
     # Layout constant pinned at creation; a legacy index (None) is never
     # pruned, so the modulus only shapes new batches' file counts there.
@@ -219,7 +223,11 @@ def write_index_batch(
             .partitionBy(_KB)
             .parquet(os.path.join(table, f"batch={batch_id}"))
         )
-    buckets.write.mode("overwrite").parquet(
+    # The payload keeps one partition per core (the fold's doc_id
+    # repartition); a rebalance lets AQE size this flat table's files by
+    # bytes, so a small batch lands as one file and every later probe,
+    # which opens every bucket file, does not pay one open per core.
+    buckets.hint("rebalance").write.mode("overwrite").parquet(
         os.path.join(index_path, BUCKETS, f"batch={batch_id}")
     )
 
@@ -256,23 +264,19 @@ def _read_index(
 
 def checkpointed_parts(new: DataFrame, threshold: float = 0.5, n: int = 5) -> tuple:
     """The batch's (sigs, buckets, hashed) frames, eagerly materialized —
-    computed once, shared by the probe and the index write.  r10: ONE
-    combined payload aggregation (dedup._sig_payload over the codegen
-    shingle-hash stream) is checkpointed and the three frames are
+    computed once, shared by the probe and the index write. ONE payload
+    (dedup._shingle_payload) is checkpointed and the three frames are
     projections of it, so the shingle pass — the expensive per-batch map
-    stage — runs exactly ONCE per batch where the r09 shape ran it twice
-    (signatures + hashed arrays separately); buckets is a cheap
-    row-local hash over the checkpointed rows."""
-    from kafka_streaming_polymarket_pipeline_spark.operators.scale import fan_out_narrow
+    stage — runs exactly once per batch; buckets is a cheap row-local
+    hash over the checkpointed rows.
 
-    # A micro-batch arrives in maxFilesPerTrigger-many input splits, so
-    # the payload aggregation — the expensive per-batch map stage — ran
-    # on that many cores regardless of machine width (measured r11:
-    # 2.3 s/batch on 2 of 32 cores). Widen narrow batches first; a wide
-    # batch passes through untouched (scale-adaptive, guide §2.5).
-    payload = D._sig_payload(
-        D._hashed_shingle_stream(fan_out_narrow(new), "doc_id", "text", n)
-    ).localCheckpoint(eager=True)
+    A micro-batch arrives in maxFilesPerTrigger-many input splits. The
+    payload hash-partitions the batch on doc_id at the session's default
+    parallelism before its Generate, so the shingle stage runs on every
+    core however narrow the batch, with no per-batch ``.rdd`` width probe,
+    and the fold needs no shuffle after the Generate. A repeated or null
+    doc_id in the batch fails the batch instead of merging documents."""
+    payload = D._shingle_payload(new, "doc_id", "text", n).localCheckpoint(eager=True)
     return _index_parts(payload, threshold)
 
 
@@ -376,7 +380,7 @@ def _sink_batch(
     from concurrent.futures import ThreadPoolExecutor
 
     # No batch-level localCheckpoint (r11): the batch frame is scanned
-    # exactly once — by checkpointed_parts' payload aggregation — so
+    # exactly once — by checkpointed_parts' payload fold — so
     # materializing it first was a pure extra job per micro-batch
     # (write_index_batch and the probe consume only ``parts``).
     parts = checkpointed_parts(batch, threshold, n)

@@ -303,23 +303,25 @@ WORDS = (
 
 @pytest.fixture(scope="module")
 def seeded_stream(spark):
-    """A seeded (doc_id, h64) shingle-hash stream and, per doc, the set of
-    its hashes as collected from that stream. Doc lengths run from fewer
-    shingles than OPH bins (empty bins to densify) to a few hundred."""
+    """Seeded documents, their (doc_id, _p, h64) shingle-hash stream and,
+    per doc, the set of its hashes as collected from that stream. Doc
+    lengths run from fewer shingles than OPH bins (empty bins to densify)
+    to a few hundred."""
     import random
 
     rng = random.Random(11)
-    docs = [
-        (i, " ".join(rng.choice(WORDS) for _ in range(rng.randint(2, 60))))
-        for i in range(8)
-    ]
-    stream = D._hashed_shingle_stream(
-        spark.createDataFrame(docs, "doc_id long, text string"), "doc_id", "text", 5
+    docs = spark.createDataFrame(
+        [
+            (i, " ".join(rng.choice(WORDS) for _ in range(rng.randint(2, 60))))
+            for i in range(8)
+        ],
+        "doc_id long, text string",
     )
+    stream = D._hashed_shingle_stream(docs, "doc_id", "text", 5)
     hashes: dict[int, set[int]] = {}
     for r in stream.collect():
         hashes.setdefault(r["doc_id"], set()).add(r["h64"])
-    return stream, hashes
+    return docs, stream, hashes
 
 
 def _sig(row) -> list[int]:
@@ -335,18 +337,44 @@ def _minhash_reference(hs: set[int]) -> list[int]:
     ]
 
 
-def test_sig_payload_matches_python_reference(seeded_stream):
+def test_sig_payload_matches_python_reference(spark, seeded_stream):
     """The payload's signature, hash set and size against a Python
-    reference over the collected stream. Guards the SQL text's literal
-    types and operator precedence, which the exact-Jaccard pair oracles
-    would only catch if a pair flipped."""
-    stream, hashes = seeded_stream
+    reference over the collected stream, for the grouped payload and the
+    map-local fold. Guards the SQL text's literal types and operator
+    precedence, and the fold's int64 arithmetic, which the exact-Jaccard
+    pair oracles would only catch if a pair flipped. The fold runs on
+    7-row Arrow batches, so most documents straddle two or more batches
+    and the carry between batches is exercised."""
+    docs, stream, hashes = seeded_stream
     want = {doc: _minhash_reference(hs) for doc, hs in hashes.items()}
-    rows = D._sig_payload(stream).collect()
-    assert {r["doc_id"]: _sig(r) for r in rows} == want
-    assert {r["doc_id"]: (r["sz"], set(r["hsh"])) for r in rows} == {
-        doc: (len(hs), hs) for doc, hs in hashes.items()
-    }
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        folded = D._shingle_payload(docs, "doc_id", "text", 5).collect()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    for rows in (D._sig_payload(stream).collect(), folded):
+        assert len(rows) == len(hashes)
+        assert {r["doc_id"]: _sig(r) for r in rows} == want
+        assert {r["doc_id"]: (r["sz"], set(r["hsh"])) for r in rows} == {
+            doc: (len(hs), hs) for doc, hs in hashes.items()
+        }
+
+
+@pytest.mark.parametrize(
+    "rows, message",
+    [
+        ([(1, "repeated document one"), (2, "another document"), (1, "repeated document two")],
+         "doc_id 1 names more than one document"),
+        ([(None, "a document without an id"), (2, "another document")], "null doc_id"),
+    ],
+)
+def test_fold_payload_rejects_repeated_and_null_doc_ids(spark, rows, message):
+    """The fold's precondition is unique, non-null doc_ids: where the
+    grouped payload merged a repeated id's documents into one signature,
+    the fold fails the job."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    with pytest.raises(Exception, match=message):
+        D._shingle_payload(docs, "doc_id", "text", 5).collect()
 
 
 def test_minhash_signatures_match_python_reference(planted):
@@ -375,7 +403,7 @@ def _oph_reference(hs: set[int]) -> list[int]:
 
 
 def test_oph_densify_matches_python_rotation(seeded_stream):
-    stream, hashes = seeded_stream
+    _, stream, hashes = seeded_stream
     want = {doc: _oph_reference(hs) for doc, hs in hashes.items()}
     assert any(len(hs) < D.NUM_PERM for hs in hashes.values())  # some bins borrow
     payload = D._oph_payload(stream).collect()
@@ -396,10 +424,12 @@ def test_wide_builders_stay_within_gateway_call_budget(spark, monkeypatch):
 
     client = spark.sparkContext._gateway._gateway_client
     one = spark.createDataFrame([(1, 7)], "doc_id long, h64 long")
+    doc = spark.createDataFrame([(1, "one document")], "doc_id long, text string")
     cand = spark.createDataFrame([(1, 2)], "doc_id_a long, doc_id_b long")
     payload = D._sig_payload(one)
     builders = {
         "_sig_payload": lambda: D._sig_payload(one),
+        "_shingle_payload": lambda: D._shingle_payload(doc, "doc_id", "text", 5),
         "_band_buckets": lambda: D._band_buckets(payload),
         "_est_filter": lambda: D._est_filter(cand, payload, 38),
         "_oph_payload": lambda: D._oph_payload(one),

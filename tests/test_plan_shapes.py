@@ -7,6 +7,8 @@ accidentally introduces a non-equi join fails here before it ever ships.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from kafka_streaming_polymarket_pipeline_spark import plans
@@ -211,8 +213,11 @@ def test_pq_seed_window_input_is_bounded(spark, sf_smoke):
 
 # The only sanctioned Python-side compute in registered queries: the
 # multimodal decode stages run Arrow-batched mapInPandas (codecs are
-# genuinely non-relational). Everything else must stay JVM-side.
+# genuinely non-relational), and the MinHash payload runs one map-local
+# MapInArrow fold over its shingle stream (dedup._fold_payload), which
+# any query may plan. Everything else must stay JVM-side.
 PANDAS_ALLOWED_PREFIXES = ("m1_", "m2_", "m3_", "m4_", "m4b_")
+PAYLOAD_FOLD = re.compile(r"MapInArrow partial\(doc_id#\w+, _p#\w+, h64#\w+\)")
 
 
 @pytest.mark.slow
@@ -229,6 +234,10 @@ def test_no_unapproved_quadratic_join(spark, sf_smoke, name):
                 f"{name} plans {node} — Python-side compute is sanctioned "
                 "only for the multimodal codec queries"
             )
+    for line in plan.splitlines():
+        assert "MapInArrow" not in line or PAYLOAD_FOLD.search(line), (
+            f"{name} plans a MapInArrow that is not the MinHash payload fold"
+        )
     if name in ALLOWED_NESTED:
         return  # documented exception
     assert "CartesianProduct" not in plan, f"{name} plans a CartesianProduct"
@@ -272,3 +281,72 @@ def test_lsh_verify_join_strategy_is_size_conditional(spark, monkeypatch):
         "doc-payload joins did not all flip to shuffle-hash above the budget"
     )
     assert {(r["doc_id_a"], r["doc_id_b"]) for r in big.collect()} == small_pairs == {(0, 1)}
+
+
+def _assert_fold_payload_plan(frame, where: str) -> None:
+    """The payload's physical plan: a MapInArrow fold straight over the
+    shingle Generate, with no aggregation anywhere and one Exchange, the
+    doc_id hash repartition of the raw documents below the Generate. An
+    executed frame's plan is read up to AQE's initial-plan copy."""
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    at = lambda node: [i for i, line in enumerate(lines) if node in line]  # noqa: E731
+    assert not at("HashAggregate") and not at("SortAggregate"), (
+        f"{where}: the payload plans an aggregation — the fold should "
+        "replace explode -> groupBy(doc_id)"
+    )
+    [fold], [generate] = at("MapInArrow"), at("Generate")
+    exchanges = at("Exchange")
+    assert fold < generate, f"{where}: the fold does not sit above the Generate"
+    assert len(exchanges) == 1 and "hashpartitioning(doc_id" in lines[exchanges[0]], (
+        f"{where}: the only Exchange must be the doc_id hash repartition:\n"
+        + "\n".join(lines[i] for i in exchanges)
+    )
+    assert exchanges[0] > generate, (
+        f"{where}: an Exchange sits between the Generate and the payload"
+    )
+
+
+def test_payload_fold_has_no_shuffle_or_aggregate(spark, sf_smoke, tmp_path, monkeypatch):
+    """The MinHash payload of d3 and of a streaming-dedup micro-batch is one
+    map-side stage after the doc_id repartition: no Exchange and no
+    (Object)HashAggregate between the Generate and the payload. A
+    micro-batch never calls ``scale.fan_out_narrow`` and never converts
+    the batch to an RDD."""
+    import os
+
+    from pyspark.sql import DataFrame
+
+    from kafka_streaming_polymarket_pipeline_spark.operators import dedup as D
+    from kafka_streaming_polymarket_pipeline_spark.operators import scale
+    from kafka_streaming_polymarket_pipeline_spark.streaming import dedup_stream as DS
+    from kafka_streaming_polymarket_pipeline_spark.tables import load
+
+    docs = load(spark, sf_smoke, "documents")
+    _assert_fold_payload_plan(D._shingle_payload(docs, "doc_id", "text", 5), "d3 payload")
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    batch = spark.createDataFrame(
+        [(0, text), (1, text + "!"), (2, "a different document about stream processing")],
+        "doc_id long, text string",
+    )
+    payloads = []
+    fold = D._shingle_payload
+
+    def recording(*args, **kwargs):
+        payloads.append(fold(*args, **kwargs))
+        return payloads[-1]
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("a streaming-dedup micro-batch called fan_out_narrow")
+
+    monkeypatch.setattr(D, "_shingle_payload", recording)
+    monkeypatch.setattr(scale, "fan_out_narrow", forbidden)
+    monkeypatch.setattr(DataFrame, "rdd", property(lambda self: forbidden()))
+    pairs = str(tmp_path / "pairs")
+    DS._sink_batch(batch, 0, str(tmp_path / "idx"), pairs, 0.5, 5)
+    monkeypatch.undo()
+    [payload] = payloads
+    _assert_fold_payload_plan(payload, "streaming parts")
+    got = spark.read.parquet(os.path.join(pairs, "batch=0")).collect()
+    assert [(r["doc_id_a"], r["doc_id_b"]) for r in got] == [(0, 1)]

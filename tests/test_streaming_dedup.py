@@ -95,13 +95,15 @@ def test_write_index_batch_is_retry_idempotent(spark, tmp_path):
 def test_index_payload_reads_partition_prune(spark, tmp_path):
     """The kbucketed sigs/hashed layout must produce a real
     PartitionFilters entry (directory-level pruning) and return exactly
-    the touched buckets' rows."""
+    the touched buckets' rows. A small batch writes one file per doc
+    bucket and one band-bucket file, however many cores built it."""
     docs = spark.createDataFrame(
         [(i, f"document number {i} with some shared words") for i in range(200)],
         "doc_id long, text string",
     )
     idx = str(tmp_path / "idx")
     DS.write_index_batch(docs, idx, 0)
+    assert DS.needs_compaction(idx)["tables"] == {DS.SIGS: 1, DS.HASHED: 1, DS.BUCKETS: 1}
     pruned = DS._read_index(spark, idx, DS.SIGS, touched_buckets=[3, 7])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__kbucket" in plan
@@ -463,7 +465,7 @@ def test_flat_legacy_table_stays_flat_and_probes_keep_working(spark, tmp_path):
     idx = str(tmp_path / "idx")
     a = spark.createDataFrame(BATCH_A, "doc_id long, text string")
     # hand-build the legacy layout: flat batch dirs, no meta
-    payload = D._sig_payload(D._hashed_shingle_stream(a, "doc_id", "text", 5))
+    payload = D._shingle_payload(a, "doc_id", "text", 5)
     sigs, buckets, hashed = DS._index_parts(payload, 0.5)
     for name, part in ((DS.SIGS, sigs), (DS.HASHED, hashed), (DS.BUCKETS, buckets)):
         part.coalesce(1).write.parquet(os.path.join(idx, name, "batch=0"))
