@@ -13,14 +13,14 @@ a keep-first/scrub-later hybrid: the first arrival of a template window
 survives, every later cross-batch arrival is deleted, and same-batch
 repeats delete together exactly as the batch form would.
 
-Index layout (dedup_stream's contract): one table under ``index/``,
+Index layout: one flat ``streaming/batchdir`` table under ``index/``,
 
   ``wfreq/batch=<id>``   (ptext, nd)  — per-batch distinct-doc counts
 
 written with overwrite into its own ``batch=<id>`` dir so a crashed
 foreachBatch retry is idempotent; the probe passes ``before_batch`` so
-a retry never reads its own first attempt's rows (containment_stream's
-retry armor — double-counting a batch's own windows would push every
+a retry never reads its own first attempt's rows (batchdir's replay
+guard — double-counting a batch's own windows would push every
 batch-internal repeat over the threshold twice and, worse, flip
 singleton windows frequent on retry). Cross-batch doc identity is the
 ingest contract (doc_ids do not repeat across batches), so summing
@@ -29,22 +29,21 @@ per-batch distinct counts equals the corpus-wide distinct-doc count.
 Scale shape per batch: one groupBy over the batch's windows, one
 aggregation over the index postings for matching windows (equi-join
 prunes in the shuffle), the same Zipf-small frequent set, and d17's
-per-doc rebuild — never doc x doc, never corpus x corpus. Compaction:
-the wfreq table is flat per-batch parquet like containment_stream's
-inv/sizes, so ``containment_stream.compact_index``'s staged protocol
-applies unchanged (reuse via :func:`compact_index` below).
+per-doc rebuild — never doc x doc, never corpus x corpus. Compaction
+merges frequency rows of the same window from different batches into
+one batch dir as separate rows; the probe SUMS per window, so the merge
+needs no re-aggregation.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_streaming_polymarket_pipeline_spark.streaming import fsio
+from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 
 WFREQ = "wfreq"
+TABLES = {WFREQ: None}
 
 
 def _batch_windows(docs: DataFrame, size: int) -> DataFrame:
@@ -54,17 +53,6 @@ def _batch_windows(docs: DataFrame, size: int) -> DataFrame:
     return passage_chunks(docs, size=size, stride=size).select(
         "doc_id", "chunk_idx", F.col("chunk_text").alias("_pt")
     )
-
-
-def _read_wfreq(spark, path: str, before_batch: int | None = None) -> DataFrame:
-    if fsio.is_dir(path) and any(
-        d.startswith("batch=") for d in fsio.listdir(path)
-    ):
-        df = spark.read.option("basePath", path).parquet(os.path.join(path, "batch=*"))
-        if before_batch is not None:
-            df = df.filter(F.col("batch") < before_batch)
-        return df.drop("batch")
-    return spark.createDataFrame([], "ptext string, nd long")
 
 
 def boilerplate_scrub_batch(
@@ -85,13 +73,16 @@ def boilerplate_scrub_batch(
     )
 
     spark = new.sparkSession
+    lay = batchdir.layout(index_path, TABLES)
+    seen = batchdir.read(spark, index_path, lay, WFREQ, before_batch)
+    if seen is None:
+        seen = spark.createDataFrame([], "ptext string, nd long")
     paras = _batch_windows(new, size).localCheckpoint(eager=True)
     nd_batch = paras.groupBy("_pt").agg(
         F.countDistinct("doc_id").alias("nd")
     )
     nd_prev = (
-        _read_wfreq(spark, os.path.join(index_path, WFREQ), before_batch)
-        .groupBy("ptext")
+        seen.groupBy("ptext")
         .agg(F.sum("nd").alias("_ndp"))
         .withColumnRenamed("ptext", "_pt")
     )
@@ -127,45 +118,21 @@ def boilerplate_scrub_sink(
         scrubbed, wfreq_part = boilerplate_scrub_batch(
             batch, index_path, size, max_doc_freq, before_batch=batch_id
         )
-        scrubbed.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch={batch_id}")
-        )
-        wfreq_part.write.mode("overwrite").parquet(
-            os.path.join(index_path, WFREQ, f"batch={batch_id}")
-        )
+        batchdir.write(scrubbed, out_path, batch_id)
+        batchdir.write_tables(index_path, TABLES, batch_id, {WFREQ: wfreq_part})
 
     return foreach_batch_sink(docs_stream, process, checkpoint)
 
 
 def compact_index(spark, index_path: str) -> dict:
-    """Offline compaction: the wfreq table is flat per-batch parquet, so
-    dedup_stream's staged ``_compact_table`` protocol applies verbatim
-    (merged dir lands as ``batch=0``, ``.compact_tmp`` staging with
-    ``_SUCCESS`` gating; run ONLY with the job stopped). Frequency rows
-    for the same window in different batches stay separate rows — the
-    probe SUMS per-window, so the merge needs no re-aggregation."""
-    from kafka_streaming_polymarket_pipeline_spark.streaming.dedup_stream import (
-        _compact_table,
-        _write_flat_sized,
-    )
-
-    table = os.path.join(index_path, WFREQ)
-    if not fsio.is_dir(table):
-        return {}
-    out = _compact_table(
-        spark, table, lambda df, tmp, _t=table: _write_flat_sized(df, _t, tmp)
-    )
-    return {WFREQ: out} if out is not None else {}
+    """Offline compaction of the window-frequency index
+    (:func:`batchdir.compact`): run it only with the standing job stopped
+    and its checkpoint committed."""
+    return batchdir.compact(spark, index_path, TABLES)
 
 
-def needs_compaction(index_path: str, max_files_per_table: int = 32) -> dict:
-    """containment_stream's trigger arithmetic on the single wfreq table
-    (one parquet file per batch forever; every probe reads the table
-    whole)."""
-    table = os.path.join(index_path, WFREQ)
-    if not fsio.is_dir(table):
-        return {"needed": False, "worst": 0, "tables": {}}
-    n = sum(
-        1 for f, _ in fsio.list_files_recursive(table) if f.endswith(".parquet")
-    )
-    return {"needed": n > max_files_per_table, "worst": n, "tables": {WFREQ: n}}
+def needs_compaction(index_path: str, max_files: int = 32) -> dict:
+    """When to run :func:`compact_index` (:func:`batchdir.needs_compaction`):
+    the wfreq table's total file count, one more per batch, since every
+    probe reads it whole."""
+    return batchdir.needs_compaction(index_path, TABLES, max_files)

@@ -12,9 +12,9 @@ under ``index/``:
   ``inv/batch=<id>``    (tok, doc_id)      — the inverted postings
   ``sizes/batch=<id>``  (doc_id, sz)       — distinct-token set sizes
 
-Per micro-batch (inside one foreachBatch; every write targets
-``batch=<id>`` with overwrite, so a crash retries the whole batch
-idempotently — dedup_stream's layout contract):
+Both are flat ``streaming/batchdir`` tables (:data:`TABLES`). Per
+micro-batch (inside one foreachBatch; every write targets ``batch=<id>``
+with overwrite, so a crash retries the whole batch idempotently):
 
   1. tokenize the new docs (distinct lowercase word tokens, d15's unit);
   2. probe: join new postings against (index ∪ the batch's own
@@ -28,8 +28,8 @@ idempotently — dedup_stream's layout contract):
 
 Scale shape: per batch the probe touches only postings for tokens the
 NEW docs contain (partition-pruned at the parquet level once the index
-is bucketed by token hash — future work mirroring dedup_stream's
-_dbucket; at current scales the token equi-join already prunes in the
+is kbucketed by token in batchdir — future work, as dedup_stream does
+by doc_id; at current scales the token equi-join already prunes in the
 shuffle). Output is inherently quadratic in subsumption-cluster size,
 as for any exact pair enumeration; ``min_size`` drops signal-free tiny
 contained sets exactly as d15 does.
@@ -37,14 +37,13 @@ contained sets exactly as d15 does.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_streaming_polymarket_pipeline_spark.streaming import fsio
+from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 
 INV, SIZES = "inv", "sizes"
+TABLES = {INV: None, SIZES: None}
 
 
 def _token_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -59,22 +58,15 @@ def _token_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return post, sizes
 
 
-def _read_table(
-    spark, path: str, schema: str, before_batch: int | None = None
-) -> DataFrame:
-    """Index reader. ``before_batch`` filters to batch < it — the retry
-    armor: a foreachBatch retry of batch N must NOT see the inv/sizes
-    rows its first attempt already landed under batch=N, or every
-    batch-N token would count twice in the overlap (containment 2.0
-    rows) and the bwd leg would re-emit reversed duplicates."""
-    if any(d.startswith("batch=") for d in fsio.listdir(path)):
-        df = spark.read.option("basePath", path).parquet(
-            os.path.join(path, "batch=*")
-        )
-        if before_batch is not None:
-            df = df.filter(F.col("batch") < before_batch)
-        return df.drop("batch")
-    return spark.createDataFrame([], schema)
+def _seen(spark, index_path: str, lay, name: str, schema: str, before_batch):
+    """One index table's rows of the batches before ``before_batch``. The
+    filter is the retry armor: a foreachBatch retry of batch N must NOT
+    see the inv/sizes rows its first attempt already landed under
+    batch=N, or every batch-N token would count twice in the overlap
+    (containment 2.0 rows) and the bwd leg would re-emit reversed
+    duplicates."""
+    df = batchdir.read(spark, index_path, lay, name, before_batch)
+    return df if df is not None else spark.createDataFrame([], schema)
 
 
 def containment_probe_batch(
@@ -90,15 +82,14 @@ def containment_probe_batch(
     batch's index parts for the caller to land. All thresholds integer
     cross-multiplied (d15's discipline). The standing job passes its
     ``batch_id`` as ``before_batch`` so a crashed-then-retried batch
-    never reads its own first attempt's index rows (see _read_table)."""
+    never reads its own first attempt's index rows (see _seen)."""
     spark = new.sparkSession
+    lay = batchdir.layout(index_path, TABLES)
     post, sizes = _token_index(new)
     post = post.localCheckpoint(eager=True)
     sizes = sizes.localCheckpoint(eager=True)
-    seen_post = _read_table(spark, os.path.join(index_path, INV),
-                            "doc_id long, tok string", before_batch)
-    seen_sizes = _read_table(spark, os.path.join(index_path, SIZES),
-                             "doc_id long, sz long", before_batch)
+    seen_post = _seen(spark, index_path, lay, INV, "doc_id long, tok string", before_batch)
+    seen_sizes = _seen(spark, index_path, lay, SIZES, "doc_id long, sz long", before_batch)
     all_post = seen_post.unionByName(post)
     all_sizes = seen_sizes.unionByName(sizes)
     ov = (
@@ -155,77 +146,22 @@ def containment_probe_sink(
         pairs, post, sizes = containment_probe_batch(
             batch, index_path, num, den, min_size, before_batch=batch_id
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_path, f"batch={batch_id}")
-        )
-        post.write.mode("overwrite").parquet(
-            os.path.join(index_path, INV, f"batch={batch_id}")
-        )
-        sizes.write.mode("overwrite").parquet(
-            os.path.join(index_path, SIZES, f"batch={batch_id}")
-        )
+        batchdir.write(pairs, pairs_path, batch_id)
+        batchdir.write_tables(index_path, TABLES, batch_id, {INV: post, SIZES: sizes})
 
     return foreach_batch_sink(docs_stream, process, checkpoint)
 
 
 def compact_index(spark, index_path: str) -> dict:
-    """Offline compaction for the containment job's inverted-token index
-    — dedup_stream's staged protocol applied to the two FLAT tables here
-    (``inv``/``sizes`` have no ``__kbucket`` level, so both take the
-    byte-sized flat writer). Same operational contract: run ONLY with
-    the standing job stopped and its checkpoint committed; the merged
-    dir lands as ``batch=0`` (never the highest id — the id a
-    foreachBatch retry would overwrite), staging under ``.compact_tmp``
-    with ``_SUCCESS`` gating recovery, so a crash at any step resumes
-    losslessly. Returns per-table file-count stats
-    (see :func:`dedup_stream.compact_index` for the full rationale)."""
-    from kafka_streaming_polymarket_pipeline_spark.streaming.dedup_stream import (
-        _compact_table,
-        _write_flat_sized,
-    )
-
-    stats: dict = {}
-    for name in (INV, SIZES):
-        table = os.path.join(index_path, name)
-        if not fsio.is_dir(table):
-            continue
-        out = _compact_table(
-            spark,
-            table,
-            lambda df, tmp, _t=table: _write_flat_sized(df, _t, tmp),
-        )
-        if out is not None:
-            stats[name] = out
-    return stats
+    """Offline compaction of the containment index
+    (:func:`batchdir.compact`): run it only with the standing job stopped
+    and its checkpoint committed."""
+    return batchdir.compact(spark, index_path, TABLES)
 
 
-def needs_compaction(index_path: str, max_files_per_table: int = 32) -> dict:
-    """Decision arithmetic for WHEN to compact the containment index —
-    dedup_stream's trigger adapted to this index's probe shape: both
-    tables are FLAT and every probe reads them whole (the token
+def needs_compaction(index_path: str, max_files: int = 32) -> dict:
+    """When to run :func:`compact_index` (:func:`batchdir.needs_compaction`):
+    both tables are flat and every probe reads them whole (the token
     equi-join prunes in the shuffle, not at the file level), so the
-    metric is each table's TOTAL parquet file count, growing by one
-    file per batch forever. The default 32 ≈ half a day of hourly
-    batches, the cadence the dedup soak measured as keeping open/footer
-    overhead a rounding error. One recursive listing per table via
-    ``streaming.fsio`` (works on object-store indexes too); the
-    operator checks between stopped-job windows exactly as for the
-    dedup index::
-
-        if needs_compaction(idx)["needed"]:
-            compact_index(spark, idx)   # job STOPPED, checkpoint committed
-    """
-    tables: dict[str, int] = {}
-    for name in (INV, SIZES):
-        table = os.path.join(index_path, name)
-        if not fsio.is_dir(table):
-            continue
-        tables[name] = sum(
-            1 for f, _ in fsio.list_files_recursive(table) if f.endswith(".parquet")
-        )
-    worst = max(tables.values(), default=0)
-    return {
-        "needed": worst > max_files_per_table,
-        "worst": worst,
-        "tables": tables,
-    }
+    reading is each table's total file count, one more per batch."""
+    return batchdir.needs_compaction(index_path, TABLES, max_files)

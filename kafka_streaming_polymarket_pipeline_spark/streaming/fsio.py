@@ -152,13 +152,14 @@ def read_text(path: str) -> str:
 
 
 def write_text(path: str, text: str) -> None:
-    """Crash-safe overwrite (r09 ADVICE, low): write a sibling temp file
-    and move it into place, so a crash mid-write can never leave a
-    TRUNCATED file at ``path`` — for ``_meta.json`` a truncated file
-    bricked every later read until manual repair. The worst crash
-    window (after deleting the old file, before the rename) leaves the
-    path MISSING, which readers already handle as the legacy/unpinned
-    case. The stray temp is overwritten by the next write."""
+    """Crash-safe write (r09 ADVICE, low): write a sibling temp file and
+    move it into place, so a crash mid-write can never leave a TRUNCATED
+    file at ``path``. Locally the move is an atomic replace. Through
+    Hadoop, replacing an EXISTING file deletes it before the rename, so
+    a crash in between leaves the path missing; batchdir writes its
+    ``_meta.json`` once, to a path that does not exist yet, so that
+    window never opens for it. The stray temp is overwritten by the next
+    write."""
     tmp = path + ".__fsio_tmp__"
     if _local_only(path):
         with open(tmp, "w", encoding="utf-8") as f:

@@ -10,8 +10,8 @@ running the gate first (quality features are map-only codegen; the
 dedup probe pays one signature map pass + index reads per batch).
 
 Per micro-batch (all inside one foreachBatch, so a crash retries the
-whole batch against the same ``batch=<id>`` overwrite targets —
-idempotent like dedup_stream's):
+whole batch against the same ``batch=<id>`` overwrite targets of
+``streaming/batchdir``, with the probes reading only earlier batches):
 
   1. quality features + keep flag for the batch (stateless, row-local);
   2. quarantined rows land under ``quarantine/batch=<id>`` with their
@@ -40,6 +40,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 from kafka_streaming_polymarket_pipeline_spark.streaming import dedup_stream as DS
 from kafka_streaming_polymarket_pipeline_spark.streaming.quality_stream import (
     ENTROPY_MIN_BITS,
@@ -179,13 +180,14 @@ def corpus_ingest_sink(
         batch = batch.localCheckpoint(eager=True)
         feats = quality_features_frame(batch, entropy_min).localCheckpoint(eager=True)
         if ref_rows is not None:
-            _drift_stats_from_rows(
-                feats, ref_rows, monitor_mn, monitor_mx, monitor_col, monitor_bins
-            ).write.mode("overwrite").parquet(
-                os.path.join(out_path, "monitor", f"batch={batch_id}")
+            batchdir.write(
+                _drift_stats_from_rows(
+                    feats, ref_rows, monitor_mn, monitor_mx, monitor_col, monitor_bins
+                ),
+                os.path.join(out_path, "monitor"), batch_id,
             )
-        feats.filter(~F.col("keep")).write.mode("overwrite").parquet(
-            os.path.join(out_path, "quarantine", f"batch={batch_id}")
+        batchdir.write(
+            feats.filter(~F.col("keep")), os.path.join(out_path, "quarantine"), batch_id
         )
         admitted = batch.join(
             feats.filter(F.col("keep")).select("doc_id"), "doc_id"
@@ -209,9 +211,7 @@ def corpus_ingest_sink(
                 )
                 .localCheckpoint(eager=True)
             )
-            wfreq_part.write.mode("overwrite").parquet(
-                os.path.join(index_path, BS.WFREQ, f"batch={batch_id}")
-            )
+            batchdir.write_tables(index_path, BS.TABLES, batch_id, {BS.WFREQ: wfreq_part})
         landed = admitted
         if lam_rows is not None:
             from kafka_streaming_polymarket_pipeline_spark.operators.sampling import (
@@ -238,17 +238,13 @@ def corpus_ingest_sink(
                 F.col("ppl").alias("lm_ppl"),
             )
             landed = landed.join(lm_scores, "doc_id")
-        landed.write.mode("overwrite").parquet(
-            os.path.join(out_path, "admitted", f"batch={batch_id}")
-        )
+        batchdir.write(landed, os.path.join(out_path, "admitted"), batch_id)
         # dedup only over admitted docs: rejects never cost signatures
         parts = DS.checkpointed_parts(admitted, threshold, n)
         pairs = DS.incremental_pairs_against_index(
-            admitted, index_path, threshold, n, parts=parts
+            admitted, index_path, threshold, n, parts=parts, before_batch=batch_id
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(out_path, "pairs", f"batch={batch_id}")
-        )
+        batchdir.write(pairs, os.path.join(out_path, "pairs"), batch_id)
         DS.write_index_batch(admitted, index_path, batch_id, threshold, n, parts=parts)
 
     return foreach_batch_sink(docs_stream, process, checkpoint)

@@ -152,6 +152,7 @@ def ingest_probe() -> None:
 def soak_probe() -> None:
     from kafka_streaming_polymarket_pipeline_spark.session import get_spark
     import kafka_streaming_polymarket_pipeline_spark.streaming.dedup_stream as ds
+    from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 
     spark = get_spark(app_name="soak-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -166,7 +167,7 @@ def soak_probe() -> None:
     shutil.rmtree(d, ignore_errors=True)
     index_path = os.path.join(d, "index")
     pairs_path = os.path.join(d, "pairs")
-    ds.N_DOC_BUCKETS = 64  # layout knob for this regime (1k+ doc batches)
+    batchdir.N_BUCKETS = 64  # layout knob for this regime (1k+ doc batches)
 
     # keep a sample of earlier texts driver-side to plant near-dups from
     seen_texts: list[tuple[int, str]] = []
@@ -222,6 +223,7 @@ def soak_probe() -> None:
             row = {
                 "batch": b,
                 "index_docs": (b + 1) * batch_sz,
+                "doc_buckets": batchdir.layout(index_path, ds.TABLES).n,
                 "probe_sec": round(t_probe, 2),
                 "extend_sec": round(t_ext, 2),
                 "batch_pairs": n_pairs,

@@ -169,6 +169,7 @@ def pruning_probe() -> None:
 
     from kafka_streaming_polymarket_pipeline_spark.session import get_spark
     import kafka_streaming_polymarket_pipeline_spark.streaming.dedup_stream as ds
+    from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 
     rng = np.random.RandomState(11)
     base_dir = os.path.join(BASE, "pruning")
@@ -186,7 +187,7 @@ def pruning_probe() -> None:
     spark = get_spark(app_name="pruning-probe")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm
 
-    ds.N_DOC_BUCKETS = 256  # production layout knob, fixed at creation
+    batchdir.N_BUCKETS = 256  # production layout knob, fixed at creation
     index_path = os.path.join(base_dir, "index")
     idx_df = spark.createDataFrame(
         list(zip(range(n_index), index_texts)), "doc_id long, text string"
@@ -212,14 +213,14 @@ def pruning_probe() -> None:
     seen_touched: list = []
 
     def run(pruned: bool):
-        orig = ds._read_index
+        orig = batchdir.read
 
-        def spy(sp, p, nme, touched_buckets=None):
-            if pruned and touched_buckets is not None:
-                seen_touched.append(list(touched_buckets))
-            return orig(sp, p, nme, touched_buckets if pruned else None)
+        def spy(*args, buckets=None, **kwargs):
+            if pruned and buckets is not None:
+                seen_touched.append(list(buckets))
+            return orig(*args, buckets=buckets if pruned else None, **kwargs)
 
-        ds._read_index = spy
+        batchdir.read = spy
         try:
             parts = ds.checkpointed_parts(new)
             t0 = time.perf_counter()
@@ -227,24 +228,25 @@ def pruning_probe() -> None:
             rows = {(r["doc_id_a"], r["doc_id_b"]) for r in pairs.collect()}
             return time.perf_counter() - t0, rows
         finally:
-            ds._read_index = orig
+            batchdir.read = orig
 
     t_full, pairs_full = run(pruned=False)
     t_pruned, pairs_pruned = run(pruned=True)
     assert pairs_full == pairs_pruned, "pruning changed the pair set"
 
     # payload rows each mode reads (sigs, the 129-column table)
-    full_rows = ds._read_index(spark, index_path, ds.SIGS).count()
+    lay = batchdir.layout(index_path, ds.TABLES)
+    full_rows = batchdir.read(spark, index_path, lay, ds.SIGS).count()
     touched = sorted(set(seen_touched[0])) if seen_touched else []
     pruned_rows = (
-        ds._read_index(spark, index_path, ds.SIGS, touched_buckets=touched).count()
+        batchdir.read(spark, index_path, lay, ds.SIGS, buckets=touched).count()
         if touched
         else 0
     )
     print(json.dumps({
         "scenario": "streaming_dedup_pruning_design_regime",
         "index_docs": n_index, "batch_docs": n_batch, "near_dups": n_dups,
-        "doc_buckets": ds.N_DOC_BUCKETS,
+        "doc_buckets": lay.n,
         "index_build_sec": round(t_build, 2),
         "probe_sec_unpruned": round(t_full, 2),
         "probe_sec_pruned": round(t_pruned, 2),

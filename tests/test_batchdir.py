@@ -1,0 +1,189 @@
+"""The batch-dir index layer (streaming/batchdir.py) shared by the
+standing dedup, containment and boilerplate sinks.
+
+- An index in a layout the code never writes fails loudly, on the write
+  and the probe path alike, before any file lands.
+- Crash-at-every-write replay: every sink write goes through
+  ``batchdir.write``, so a crash right after any one of them (an output
+  or an index table of batch 1) is injected by patching that function;
+  the restart from the checkpoint must leave outputs and index tables
+  equal to an uninterrupted run.
+
+Run the whole index layer with ``python -m pytest tests/test_batchdir.py -m ""``.
+"""
+
+from __future__ import annotations
+
+import os
+import time
+
+import pytest
+
+from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
+from kafka_streaming_polymarket_pipeline_spark.streaming import boilerplate_stream as BS
+from kafka_streaming_polymarket_pipeline_spark.streaming import containment_stream as CS
+from kafka_streaming_polymarket_pipeline_spark.streaming import dedup_stream as DS
+
+SCHEMA = "doc_id long, text string"
+BASE = (
+    "the quick brown fox jumps over the lazy dog while the merge join "
+    "streams sorted batches of rows into the hash table for the big scan"
+)
+BATCH_A = [
+    (0, BASE),
+    (1, BASE),
+    (2, "completely different content about window functions and watermarks"),
+]
+BATCH_B = [
+    (3, BASE.replace("quick", "rapid")),
+    (4, "to be or not to be"),
+    (5, BASE.replace("dog", "cat").replace("rows", "tuples")),
+]
+
+
+def _files(root) -> list[str]:
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+
+
+@pytest.mark.parametrize("state", ["no_meta", "truncated_meta", "flat_kbucketed_table"])
+def test_unknown_layout_fails_loudly_before_any_write(spark, tmp_path, state):
+    """Batch dirs without _meta.json, an unparseable _meta.json, and a
+    kbucketed table whose batch dir holds parquet files directly all
+    leave the bucket count unknown. Writing and probing both raise the
+    "rebuild the index" error, and no file lands."""
+    idx = str(tmp_path / "idx")
+    DS.write_index_batch(spark.createDataFrame(BATCH_A, SCHEMA), idx, 0)
+    meta = os.path.join(idx, batchdir.META)
+    if state == "no_meta":
+        os.remove(meta)
+    elif state == "truncated_meta":
+        with open(meta, "w") as f:
+            f.write('{"n_doc_buc')
+        # drop Hadoop's checksum sidecar, which would reject the edit
+        # before the content is parsed
+        os.remove(os.path.join(idx, f".{batchdir.META}.crc"))
+    else:  # move sigs' batch-0 files up out of their __kbucket= dirs
+        b0 = os.path.join(idx, DS.SIGS, "batch=0")
+        for kb in [d for d in os.listdir(b0) if d.startswith(batchdir.KB)]:
+            for f in os.listdir(os.path.join(b0, kb)):
+                os.rename(os.path.join(b0, kb, f), os.path.join(b0, f))
+            os.rmdir(os.path.join(b0, kb))
+    before = _files(tmp_path)
+    new = spark.createDataFrame(BATCH_B, SCHEMA)
+    with pytest.raises(batchdir.IndexLayoutError, match="rebuild the index"):
+        DS.write_index_batch(new, idx, 1)
+    with pytest.raises(batchdir.IndexLayoutError, match="rebuild the index"):
+        DS.incremental_pairs_against_index(new, idx)
+    assert _files(tmp_path) == before
+
+
+# sink -> (start(stream, root), output dirs, index tables)
+SINKS = {
+    "dedup": (
+        lambda s, r: DS.incremental_dedup_sink(s, f"{r}/index", f"{r}/pairs", f"{r}/ck"),
+        ("pairs",),
+        DS.TABLES,
+    ),
+    "containment": (
+        lambda s, r: CS.containment_probe_sink(s, f"{r}/index", f"{r}/pairs", f"{r}/ck"),
+        ("pairs",),
+        CS.TABLES,
+    ),
+    "boilerplate": (
+        lambda s, r: BS.boilerplate_scrub_sink(
+            s, f"{r}/index", f"{r}/docs", f"{r}/ck", size=4
+        ),
+        ("docs",),
+        BS.TABLES,
+    ),
+}
+CRASHES = [
+    (sink, table)
+    for sink, (_, outputs, tables) in SINKS.items()
+    for table in (*outputs, *tables)
+]
+
+
+def _table_dir(sink: str, root: str, table: str) -> str:
+    return os.path.join(root, table if table in SINKS[sink][1] else f"index/{table}")
+
+
+@pytest.fixture(scope="module")
+def src(spark, tmp_path_factory) -> str:
+    src = tmp_path_factory.mktemp("src")
+    spark.createDataFrame(BATCH_A, SCHEMA).coalesce(1).write.parquet(str(src / "f0"))
+    time.sleep(1.1)  # distinct mtimes -> batch 0 is BATCH_A, batch 1 BATCH_B
+    spark.createDataFrame(BATCH_B, SCHEMA).coalesce(1).write.parquet(str(src / "f1"))
+    return str(src)
+
+
+def _start(spark, src: str, sink: str, root: str):
+    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(
+        f"{src}/f*"
+    )
+    return SINKS[sink][0](stream, root)
+
+
+def _run(spark, src: str, sink: str, root: str) -> None:
+    q = _start(spark, src, sink, root)
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
+
+
+def _state(spark, sink: str, root: str) -> dict:
+    """Every output and index table's rows, with their batch (and
+    __kbucket) partition values."""
+    _, outputs, tables = SINKS[sink]
+    out = {}
+    for table in (*outputs, *tables):
+        path = _table_dir(sink, root, table)
+        df = spark.read.option("basePath", path).parquet(f"{path}/batch=*")
+        out[table] = sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+        )
+    return out
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, src, tmp_path_factory):
+    runs: dict = {}
+
+    def state(sink: str) -> dict:
+        if sink not in runs:
+            root = str(tmp_path_factory.mktemp(f"plain-{sink}"))
+            _run(spark, src, sink, root)
+            runs[sink] = _state(spark, sink, root)
+        return runs[sink]
+
+    return state
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("sink,table", CRASHES)
+def test_crash_after_any_write_replays_to_uninterrupted_state(
+    spark, src, uninterrupted, tmp_path, monkeypatch, sink, table
+):
+    from pyspark.errors import StreamingQueryException
+
+    root = str(tmp_path)
+    write = batchdir.write
+
+    def crash_after(df, path, batch_id, *args):
+        write(df, path, batch_id, *args)
+        if batch_id == 1 and os.path.basename(path) == table:
+            raise RuntimeError(f"crash after the {table} write of batch 1")
+
+    monkeypatch.setattr(batchdir, "write", crash_after)
+    q = _start(spark, src, sink, root)
+    with pytest.raises(StreamingQueryException, match="crash after"):
+        q.awaitTermination(180)
+    q.stop()
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(_table_dir(sink, root, table), "batch=1"))
+
+    _run(spark, src, sink, root)  # restart from the checkpoint: batch 1 replays
+    want = uninterrupted(sink)
+    assert _state(spark, sink, root) == want
+    assert all(want.values())

@@ -127,7 +127,7 @@ def test_compaction_trigger_and_parity(spark, tmp_path):
 
     stats = BS.compact_index(spark, idx)
     assert BS.WFREQ in stats
-    assert BS.needs_compaction(idx, max_files_per_table=1)["worst"] >= 1
+    assert BS.needs_compaction(idx, max_files=1)["worst"] >= 1
 
     post, _ = BS.boilerplate_scrub_batch(probe, idx, before_batch=99)
     assert {r.doc_id: (r.text_clean, r.n_removed) for r in post.collect()} == pre_rows

@@ -202,17 +202,17 @@ def test_needs_compaction_decision_arithmetic(spark, tmp_path):
         _, post, sizes = CS.containment_probe_batch(df, idx, before_batch=i)
         post.coalesce(1).write.parquet(os.path.join(idx, CS.INV, f"batch={i}"))
         sizes.coalesce(1).write.parquet(os.path.join(idx, CS.SIZES, f"batch={i}"))
-    before = CS.needs_compaction(idx, max_files_per_table=2)
+    before = CS.needs_compaction(idx, max_files=2)
     assert set(before["tables"]) == {CS.INV, CS.SIZES}
     assert before["worst"] >= 3 and before["needed"] is True
-    assert CS.needs_compaction(idx, max_files_per_table=100)["needed"] is False
+    assert CS.needs_compaction(idx, max_files=100)["needed"] is False
     stats = CS.compact_index(spark, idx)
     assert set(stats) == {CS.INV, CS.SIZES}
     for t in (CS.INV, CS.SIZES):
         dirs = [d for d in os.listdir(os.path.join(idx, t)) if d.startswith("batch=")]
         assert dirs == ["batch=0"]
         assert stats[t]["files_after"] <= stats[t]["files_before"]
-    after = CS.needs_compaction(idx, max_files_per_table=2)
+    after = CS.needs_compaction(idx, max_files=2)
     assert after["worst"] < before["worst"] and after["needed"] is False
 
 

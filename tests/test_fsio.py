@@ -68,7 +68,7 @@ def test_dedup_index_on_file_uri(spark, tmp_path):
     assert run(uri_idx) == run(loc_idx)  # same pairs either way
     assert os.path.exists(tmp_path / "uri_idx" / "_meta.json")
 
-    dec = DS.needs_compaction(uri_idx, max_files_per_bucket=1)
+    dec = DS.needs_compaction(uri_idx, max_files=1)
     assert dec["worst"] >= 2  # two batches landed
     stats = DS.compact_index(spark, uri_idx)
     assert set(stats) == {"sigs", "hashed", "buckets"}
@@ -131,9 +131,7 @@ def test_needs_compaction_runs_without_session(tmp_path, monkeypatch):
     local-FS metadata walk, no JVM."""
     from pyspark.sql import SparkSession
 
-    from kafka_streaming_polymarket_pipeline_spark.streaming.containment_stream import (
-        needs_compaction,
-    )
+    from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 
     monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
     idx = str(tmp_path / "cidx")
@@ -142,28 +140,6 @@ def test_needs_compaction_runs_without_session(tmp_path, monkeypatch):
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, f"part-{b}.parquet"), "w") as f:
             f.write("x")
-    out = needs_compaction(idx, max_files_per_table=2)
+    out = batchdir.needs_compaction(idx, {"inv": None}, max_files=2)
     assert out["needed"] is True
 
-
-def test_corrupt_meta_repins_as_legacy(spark, tmp_path):
-    """A truncated _meta.json (crash mid-write predating the atomic
-    write) must repin as legacy-unpruned with a warning, not brick the
-    index in json.loads."""
-    import warnings as w
-
-    from kafka_streaming_polymarket_pipeline_spark.streaming import (
-        dedup_stream as DS,
-    )
-
-    idx = str(tmp_path / "bidx")
-    os.makedirs(idx)
-    with open(os.path.join(idx, DS._META), "w") as f:
-        f.write('{"n_doc_buc')  # truncated
-    assert DS._bucket_count(idx) is None  # never prune on corrupt meta
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        assert DS._ensure_meta(idx) is None
-    assert any("unparseable" in str(x.message) for x in caught)
-    # repaired: now a valid legacy pin
-    assert fsio.read_text(os.path.join(idx, DS._META)) == '{"n_doc_buckets": null}'

@@ -12,6 +12,7 @@ import time
 from pyspark.sql import functions as F
 
 from kafka_streaming_polymarket_pipeline_spark.operators import dedup as D
+from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 from kafka_streaming_polymarket_pipeline_spark.streaming import dedup_stream as DS
 
 BASE = (
@@ -104,13 +105,14 @@ def test_index_payload_reads_partition_prune(spark, tmp_path):
     idx = str(tmp_path / "idx")
     DS.write_index_batch(docs, idx, 0)
     assert DS.needs_compaction(idx)["tables"] == {DS.SIGS: 1, DS.HASHED: 1, DS.BUCKETS: 1}
-    pruned = DS._read_index(spark, idx, DS.SIGS, touched_buckets=[3, 7])
+    lay = batchdir.layout(idx, DS.TABLES)
+    pruned = batchdir.read(spark, idx, lay, DS.SIGS, buckets=[3, 7])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__kbucket" in plan
     want = {
         r["doc_id"]
         for r in docs.select("doc_id")
-        .withColumn("kb", DS._dbucket())
+        .withColumn("kb", batchdir.bucket("doc_id", lay.n))
         .filter(F.col("kb").isin([3, 7]))
         .collect()
     }
@@ -119,7 +121,7 @@ def test_index_payload_reads_partition_prune(spark, tmp_path):
 
 
 @pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
-def test_bucket_count_pinned_in_meta_survives_constant_change(spark, tmp_path):
+def test_bucket_count_pinned_in_meta_survives_constant_change(spark, tmp_path, monkeypatch):
     """The bucket modulus is the DIRECTORY LAYOUT: an index created at
     one count and probed/extended by a process whose module constant
     differs must keep using the pinned count — otherwise pruned probes
@@ -130,87 +132,36 @@ def test_bucket_count_pinned_in_meta_survives_constant_change(spark, tmp_path):
     a = spark.createDataFrame(BATCH_A, "doc_id long, text string")
     b = spark.createDataFrame(BATCH_B, "doc_id long, text string")
 
-    orig = DS.N_DOC_BUCKETS
-    try:
-        DS.N_DOC_BUCKETS = 8
-        DS.write_index_batch(a, idx, 0)
-        assert json.load(open(os.path.join(idx, DS._META)))["n_doc_buckets"] == 8
+    monkeypatch.setattr(batchdir, "N_BUCKETS", 8)
+    DS.write_index_batch(a, idx, 0)
+    assert json.load(open(os.path.join(idx, batchdir.META)))["n_doc_buckets"] == 8
 
-        # "restart" with a different constant: writes AND probes must
-        # still resolve the pinned 8
-        DS.N_DOC_BUCKETS = 64
-        DS.write_index_batch(b, idx, 1)
-        kbs = {
-            int(d.split("=")[1])
-            for d in os.listdir(os.path.join(idx, DS.HASHED, "batch=1"))
-            if d.startswith(DS._KB)
-        }
-        assert kbs and max(kbs) < 8  # new batch written with the pinned modulus
+    # "restart" with a different constant: writes AND probes must
+    # still resolve the pinned 8
+    monkeypatch.setattr(batchdir, "N_BUCKETS", 64)
+    DS.write_index_batch(b, idx, 1)
+    kbs = {
+        int(d.split("=")[1])
+        for d in os.listdir(os.path.join(idx, DS.HASHED, "batch=1"))
+        if d.startswith(batchdir.KB)
+    }
+    assert kbs and max(kbs) < 8  # new batch written with the pinned modulus
 
-        probe = spark.createDataFrame(
-            [(9, BASE.replace("lazy", "idle"))], "doc_id long, text string"
-        )
-        got = {
-            (r["doc_id_a"], r["doc_id_b"])
-            for r in DS.incremental_pairs_against_index(probe, idx).collect()
-        }
-        # ground truth over the union corpus, restricted to pairs touching 9
-        full = a.unionByName(b).unionByName(probe)
-        want = {
-            (r["doc_id_a"], r["doc_id_b"])
-            for r in D.ngram_jaccard_pairs(full, 0.5).collect()
-            if r["doc_id_a"] == 9 or r["doc_id_b"] == 9
-        }
-        assert got == want and want  # no silently-dropped pairs
-    finally:
-        DS.N_DOC_BUCKETS = orig
-
-@pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
-def test_legacy_index_without_meta_probes_unpruned(spark, tmp_path):
-    """An index with batch dirs but no _meta.json predates the pinning
-    scheme; its creation modulus is unknowable (empty buckets leave no
-    __kbucket dir), so pinning the CURRENT constant would prune against
-    the wrong layout and silently drop pairs.  Such an index must be
-    pinned as legacy (null) and probed UNPRUNED — correct, just slower."""
-    import json
-    import warnings as W
-
-    idx = str(tmp_path / "idx")
-    a = spark.createDataFrame(BATCH_A, "doc_id long, text string")
-    b = spark.createDataFrame(BATCH_B, "doc_id long, text string")
-
-    orig = DS.N_DOC_BUCKETS
-    try:
-        DS.N_DOC_BUCKETS = 8
-        DS.write_index_batch(a, idx, 0)
-        os.remove(os.path.join(idx, DS._META))  # simulate a pre-meta index
-
-        # "restart" with a different constant — the exact scenario where
-        # pinning the current constant would corrupt pruned probes
-        DS.N_DOC_BUCKETS = 64
-        assert DS._bucket_count(idx) is None  # legacy: never prune
-        with W.catch_warnings(record=True) as caught:
-            W.simplefilter("always")
-            DS.write_index_batch(b, idx, 1)
-        assert any("legacy-unpruned" in str(w.message) for w in caught)
-        assert json.load(open(os.path.join(idx, DS._META)))["n_doc_buckets"] is None
-
-        probe = spark.createDataFrame(
-            [(9, BASE.replace("lazy", "idle"))], "doc_id long, text string"
-        )
-        got = {
-            (r["doc_id_a"], r["doc_id_b"])
-            for r in DS.incremental_pairs_against_index(probe, idx).collect()
-        }
-        full = a.unionByName(b).unionByName(probe)
-        want = {
-            (r["doc_id_a"], r["doc_id_b"])
-            for r in D.ngram_jaccard_pairs(full, 0.5).collect()
-            if r["doc_id_a"] == 9 or r["doc_id_b"] == 9
-        }
-        assert got == want and want  # unpruned read: no dropped pairs
-    finally:
-        DS.N_DOC_BUCKETS = orig
+    probe = spark.createDataFrame(
+        [(9, BASE.replace("lazy", "idle"))], "doc_id long, text string"
+    )
+    got = {
+        (r["doc_id_a"], r["doc_id_b"])
+        for r in DS.incremental_pairs_against_index(probe, idx).collect()
+    }
+    # ground truth over the union corpus, restricted to pairs touching 9
+    full = a.unionByName(b).unionByName(probe)
+    want = {
+        (r["doc_id_a"], r["doc_id_b"])
+        for r in D.ngram_jaccard_pairs(full, 0.5).collect()
+        if r["doc_id_a"] == 9 or r["doc_id_b"] == 9
+    }
+    assert got == want and want  # no silently-dropped pairs
 
 
 def test_retry_after_index_write_emits_no_self_pairs(spark, tmp_path):
@@ -238,55 +189,58 @@ def test_retry_after_index_write_emits_no_self_pairs(spark, tmp_path):
     assert retried == original and original
 
 
-def test_replayed_batch_writes_pairs_before_index(spark, tmp_path, monkeypatch):
-    """A replayed batch (its batch=<id> index dirs already exist: the crash
-    came after the index write began, before the stream checkpoint) must
-    finish the pairs write before write_index_batch overwrites its index
-    dirs: the probe's file listing includes those files, and a concurrent
-    overwrite deletes them under the running pairs job. A first attempt
-    keeps the two writes concurrent on the pool threads."""
+def test_replayed_batch_writes_concurrently_and_emits_identical_pairs(
+    spark, tmp_path, monkeypatch
+):
+    """A replayed batch (the crash came after its writes landed, before
+    the stream checkpoint) runs the pairs and index writes on the pool
+    threads like a first attempt, and emits the pairs of the first
+    attempt. The pairs write is held until the index overwrite has
+    replaced the batch's own index files, so the replay's probe must not
+    have listed them: its scan prunes ``batch=<batch_id>`` (batchdir's
+    ``batch < before_batch`` filter); without the filter the pairs job
+    fails on the deleted files."""
     import threading
 
-    from pyspark.sql.readwriter import DataFrameWriter
-
     idx, pairs_path = str(tmp_path / "idx"), str(tmp_path / "pairs")
-    batch = spark.createDataFrame(BATCH_A + BATCH_B, "doc_id long, text string")
-    spans = []  # (write, thread name, start, end)
-    write_index, parquet = DS.write_index_batch, DataFrameWriter.parquet
+    threads = []  # (write, thread name)
+    index_done = threading.Event()
+    write_index, write = DS.write_index_batch, batchdir.write
 
-    def timed(name, fn, *args, **kwargs):
-        t0 = time.perf_counter()
-        fn(*args, **kwargs)
-        spans.append((name, threading.current_thread().name, t0, time.perf_counter()))
+    def index_then_release(*args, **kwargs):
+        threads.append(("index", threading.current_thread().name))
+        try:
+            write_index(*args, **kwargs)
+        finally:
+            index_done.set()
 
-    def timed_parquet(self, path, *args, **kwargs):
-        if str(path).startswith(pairs_path):
-            timed("pairs", parquet, self, path, *args, **kwargs)
-        else:
-            parquet(self, path, *args, **kwargs)
+    def pairs_after_index(df, table, batch_id, *args):
+        if table == pairs_path:
+            threads.append(("pairs", threading.current_thread().name))
+            assert index_done.wait(120), "the index write did not finish"
+        write(df, table, batch_id, *args)
 
-    monkeypatch.setattr(DS, "write_index_batch", lambda *a, **k: timed("index", write_index, *a, **k))
-    monkeypatch.setattr(DataFrameWriter, "parquet", timed_parquet)
+    monkeypatch.setattr(DS, "write_index_batch", index_then_release)
+    monkeypatch.setattr(batchdir, "write", pairs_after_index)
 
-    def pairs_of_batch0():
-        rows = spark.read.parquet(f"{pairs_path}/batch=0").collect()
-        return {(r["doc_id_a"], r["doc_id_b"], r["jaccard"]) for r in rows}
+    def sink(batch_id, rows):
+        threads.clear()
+        index_done.clear()
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
+        DS._sink_batch(batch, batch_id, idx, pairs_path, 0.5, 5)
+        got = spark.read.parquet(f"{pairs_path}/batch={batch_id}").collect()
+        return {(r["doc_id_a"], r["doc_id_b"], r["jaccard"]) for r in got}
 
-    DS._sink_batch(batch, 0, idx, pairs_path, 0.5, 5)
-    assert sorted(s[0] for s in spans) == ["index", "pairs"]
-    assert all(s[1] != threading.current_thread().name for s in spans)  # pool threads
-    original = pairs_of_batch0()
-
-    spans.clear()
-    DS._sink_batch(batch, 0, idx, pairs_path, 0.5, 5)  # the replay
-    (pairs,) = [s for s in spans if s[0] == "pairs"]
-    (index,) = [s for s in spans if s[0] == "index"]
-    assert pairs[3] <= index[2], "replay overlapped the pairs and index writes"
-    assert pairs_of_batch0() == original and original
+    sink(0, BATCH_A)
+    first = sink(1, BATCH_B)
+    replay = sink(1, BATCH_B)
+    assert sorted(w for w, _ in threads) == ["index", "pairs"]
+    assert all(t != threading.current_thread().name for _, t in threads)  # pool threads
+    assert replay == first and first
 
 
 @pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
-def test_compact_index_preserves_probes_and_shrinks_files(spark, tmp_path):
+def test_compact_index_preserves_probes_and_shrinks_files(spark, tmp_path, monkeypatch):
     """Offline compaction merges all batch dirs into one per table:
     probe results are identical before/after, parquet file counts
     shrink, the pinned modulus survives, and the index keeps accepting
@@ -304,13 +258,10 @@ def test_compact_index_preserves_probes_and_shrinks_files(spark, tmp_path):
     # pin a small modulus so 3 batches x few-docs MUST overlap buckets:
     # after compaction each table holds <= 4 files, before it holds one
     # file per touched bucket per batch — a guaranteed strict shrink
-    orig = DS.N_DOC_BUCKETS
-    try:
-        DS.N_DOC_BUCKETS = 4
-        for i, b in enumerate(batches):
-            DS.write_index_batch(b, idx, i)
-    finally:
-        DS.N_DOC_BUCKETS = orig
+    monkeypatch.setattr(batchdir, "N_BUCKETS", 4)
+    for i, b in enumerate(batches):
+        DS.write_index_batch(b, idx, i)
+    monkeypatch.undo()
 
     probe = spark.createDataFrame(
         [(9, BASE.replace("lazy", "idle"))], "doc_id long, text string"
@@ -345,7 +296,7 @@ def test_compact_index_preserves_probes_and_shrinks_files(spark, tmp_path):
             "files_after": n_parquet(t),
             "recovered": False,
         }
-    assert DS._bucket_count(idx) == 4  # pinned modulus survives compaction
+    assert batchdir.layout(idx, DS.TABLES).n == 4  # pinned modulus survives compaction
 
     # the compacted index keeps working: extend with a NEW batch, probe
     nxt = spark.createDataFrame(
@@ -455,56 +406,6 @@ def test_compact_index_recovers_partial_deletion_without_data_loss(spark, tmp_pa
 
 
 @pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
-def test_flat_legacy_table_stays_flat_and_probes_keep_working(spark, tmp_path):
-    """A pre-kbucket index (flat batch dirs) must keep accepting new
-    batches WITHOUT inventing the __kbucket level — mixed partition
-    depths under one basePath make every later read raise — and both
-    probing and compaction must work on it (unpruned, warned)."""
-    import warnings as W
-
-    idx = str(tmp_path / "idx")
-    a = spark.createDataFrame(BATCH_A, "doc_id long, text string")
-    # hand-build the legacy layout: flat batch dirs, no meta
-    payload = D._shingle_payload(a, "doc_id", "text", 5)
-    sigs, buckets, hashed = DS._index_parts(payload, 0.5)
-    for name, part in ((DS.SIGS, sigs), (DS.HASHED, hashed), (DS.BUCKETS, buckets)):
-        part.coalesce(1).write.parquet(os.path.join(idx, name, "batch=0"))
-    assert DS._table_is_flat(os.path.join(idx, DS.HASHED))
-
-    # new batch: must stay flat (and pin legacy meta with a warning)
-    b = spark.createDataFrame(BATCH_B, "doc_id long, text string")
-    with W.catch_warnings(record=True):
-        W.simplefilter("always")
-        DS.write_index_batch(b, idx, 1)
-    hashed_b1 = os.path.join(idx, DS.HASHED, "batch=1")
-    assert not any(x.startswith(DS._KB) for x in os.listdir(hashed_b1))
-
-    probe = spark.createDataFrame(
-        [(9, BASE.replace("lazy", "idle"))], "doc_id long, text string"
-    )
-    full = a.unionByName(b).unionByName(probe)
-    want = {
-        (r["doc_id_a"], r["doc_id_b"])
-        for r in D.ngram_jaccard_pairs(full, 0.5).collect()
-        if 9 in (r["doc_id_a"], r["doc_id_b"])
-    }
-    got = {
-        (r["doc_id_a"], r["doc_id_b"])
-        for r in DS.incremental_pairs_against_index(probe, idx).collect()
-    }
-    assert got == want and want
-
-    # compaction takes the flat path (no __kbucket column to invent)
-    stats = DS.compact_index(spark, idx)
-    assert stats[DS.HASHED]["recovered"] is False
-    got2 = {
-        (r["doc_id_a"], r["doc_id_b"])
-        for r in DS.incremental_pairs_against_index(probe, idx).collect()
-    }
-    assert got2 == want
-
-
-@pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
 def test_compacted_dir_is_batch_zero_never_a_retryable_id(spark, tmp_path):
     """The merged dir must land as batch=0, NOT the highest existing id:
     the highest id is exactly the batch a foreachBatch retry replays if
@@ -533,34 +434,31 @@ def test_compacted_dir_is_batch_zero_never_a_retryable_id(spark, tmp_path):
 
 
 @pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
-def test_needs_compaction_decision_arithmetic(spark, tmp_path):
+def test_needs_compaction_decision_arithmetic(spark, tmp_path, monkeypatch):
     """The trigger policy reports the worst per-probe-unit file count
     (max files per kbucket for payload tables, total files for the flat
     buckets table), flips needed at the threshold, and resets after
     compact_index runs."""
     idx = str(tmp_path / "idx")
-    orig = DS.N_DOC_BUCKETS
-    try:
-        DS.N_DOC_BUCKETS = 2  # 6 docs over 2 buckets -> every batch hits both
-        batch_c = [
-            (8, BASE.replace("fox", "hare")),
-            (9, "a third batch of entirely new content for bucket spread"),
-            (10, BASE.replace("lazy", "sleepy")),
-        ]
-        for i, rows in enumerate((BATCH_A, BATCH_B, batch_c)):
-            DS.write_index_batch(
-                spark.createDataFrame(rows, "doc_id long, text string"), idx, i
-            )
-    finally:
-        DS.N_DOC_BUCKETS = orig
-    before = DS.needs_compaction(idx, max_files_per_bucket=2)
+    monkeypatch.setattr(batchdir, "N_BUCKETS", 2)  # 6 docs over 2 buckets -> every batch hits both
+    batch_c = [
+        (8, BASE.replace("fox", "hare")),
+        (9, "a third batch of entirely new content for bucket spread"),
+        (10, BASE.replace("lazy", "sleepy")),
+    ]
+    for i, rows in enumerate((BATCH_A, BATCH_B, batch_c)):
+        DS.write_index_batch(
+            spark.createDataFrame(rows, "doc_id long, text string"), idx, i
+        )
+    monkeypatch.undo()
+    before = DS.needs_compaction(idx, max_files=2)
     assert set(before["tables"]) == {DS.SIGS, DS.HASHED, DS.BUCKETS}
     assert before["worst"] >= 3  # one file per bucket per batch, 3 batches
     assert before["needed"] is True
     # a lax threshold says don't bother
-    assert DS.needs_compaction(idx, max_files_per_bucket=100)["needed"] is False
+    assert DS.needs_compaction(idx, max_files=100)["needed"] is False
     DS.compact_index(spark, idx)
-    after = DS.needs_compaction(idx, max_files_per_bucket=2)
+    after = DS.needs_compaction(idx, max_files=2)
     assert after["worst"] < before["worst"]
     assert after["needed"] is False
 
