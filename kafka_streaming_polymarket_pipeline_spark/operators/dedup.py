@@ -19,9 +19,12 @@ Five families, each designed partition-parallel for 100 TB:
   operators/similarity.py).
 
 Everything is built-in-function Spark except one kernel: higher-order
-array ops for shingles, joins + aggregates for pair math, and the MinHash
-payload (signature + hash set per doc) as a numpy fold over Arrow batches
-inside the shingle stage (:func:`_fold_payload`).
+array ops for shingles, joins + aggregates for pair math, and the LSH
+funnel's payload (signature + hash set per doc) as a numpy fold over
+Arrow batches inside the shingle stage (:func:`_fold_payload`). Every
+funnel variant builds its payload there: the permutation-minima
+signature (d3, d7, d13, d18, the router's LSH leg, the streaming sink),
+the OPH signature (d3d) and the DF-pruned stream (d3c).
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ import sys
 from collections.abc import Callable
 
 from pyspark import cloudpickle
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
@@ -70,43 +73,16 @@ _PERM_B = [_rng.randrange(0, _MERSENNE_P) for _ in range(NUM_PERM)]
 # --- The funnel's NUM_PERM-wide expressions, as SQL text -------------------
 #
 # Every PySpark Column operation is at least one py4j round trip to the
-# JVM. Built from Columns, the 128-wide expressions below cost 5k-24k round
-# trips per operator (0.5-2.7 s of driver time per build, paid by every
-# streaming micro-batch before a task runs). They are built here once, as
-# SQL text, and each operator hands its list to the JVM in one call (_wide,
-# selectExpr, F.expr). The text
-# spells the Column form's expressions in the same order with the same
-# literal types: a SQL integer literal is INT when it fits 32 bits and
-# BIGINT otherwise, which is how py4j passes a Python int to F.lit.
+# JVM. Built from Columns, the 128-wide band and agreement expressions
+# below cost thousands of round trips per operator (seconds of driver
+# time, paid by every streaming micro-batch before a task runs). They are
+# built here once, as SQL text, and each operator hands its text to the
+# JVM in one call (selectExpr, F.expr). The text spells the Column form's
+# expressions in the same order with the same literal types.
 #
 # Not spark.sql(text, t=df): that binds frames through temporary views,
 # and dropping such a view uncaches the frame it wraps, which would evict
 # the persisted payload the funnel's consumers read.
-
-
-def _wide(fields: str) -> Column:
-    """A comma-separated SQL select list as ONE struct column ``_w``, for
-    the caller to expand with ``.select(..., "_w.*")``: one py4j call
-    however long the list. Works in ``select`` and, over aggregate
-    functions, in ``agg``. The plan evaluates the same expressions once
-    per output row (per doc in this module) into the struct, and a
-    Project reads the fields back out."""
-    return F.expr(f"struct({fields}) AS _w")
-
-
-def _perm_mins() -> str:
-    """The 128 permutation min-aggregates over a 64-bit shingle hash
-    column ``h64`` (h32 = h64 mod 2^32 exactly as the string path always
-    hashed: pmod(xxhash64(sh), 2^32)), as one SQL select list.
-
-    Text, not Columns: as Columns each aggregate is eight Column
-    operations (three ``F.lit``, ``*``, ``+``, ``%``, ``min``, ``alias``),
-    each one or more py4j calls, ~9k calls and ~1 s per payload build.
-    The text is built once, at import (:data:`_PERM_MINS`)."""
-    return ", ".join(
-        f"min(({_PERM_A[i]} * pmod(h64, {1 << 32}) + {_PERM_B[i]}) % {_MERSENNE_P}) AS m{i}"
-        for i in range(NUM_PERM)
-    )
 
 
 def _band_structs(r: int) -> str:
@@ -118,18 +94,9 @@ def _band_structs(r: int) -> str:
     ))
 
 
-_PERM_MINS = _perm_mins()
 _BANDS = {r: _band_structs(r) for r in (1, 2)}  # the rows _lsh_params can pick
 # IF(..., 1, 0), not a bare comparison: a null column counts as disagreement.
 _AGREE = " + ".join(f"IF(a.m{i} = b.m{i}, 1, 0)" for i in range(NUM_PERM))
-# OPH: the low 7 bits of h64 pick one of NUM_PERM bins, the other 57 are the value.
-_OPH_BIN_V = (f"pmod(h64, {NUM_PERM}) AS bin", "shiftrightunsigned(h64, 7) AS v")
-_OPH_BINS = ", ".join(f"min(CASE WHEN bin = {i} THEN mv END) AS r{i}" for i in range(NUM_PERM))
-_OPH_RR = "concat(array({0}), array({0})) AS rr".format(", ".join(f"r{i}" for i in range(NUM_PERM)))
-_OPH_DENSE = ", ".join(
-    f"element_at(filter(slice(rr, {i + 1}, {NUM_PERM}), x -> x IS NOT NULL), 1) AS m{i}"
-    for i in range(NUM_PERM)
-)
 
 
 def exact_duplicate_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -176,74 +143,131 @@ def ngram_jaccard_pairs(
     return _jaccard_from_index(shingle_index(df, id_col, text_col, n), threshold)
 
 
-def minhash_signatures(index: DataFrame) -> DataFrame:
-    """Per-doc MinHash signature: 128 columns m0..m127, each the min over the
-    doc's shingles of (a_i*h + b_i) mod p.
-
-    Shape choice is deliberate: 128 *columns* (not an array) keeps every
-    downstream comparison inside whole-stage codegen — higher-order array
-    functions evaluate interpreted, measured 4x slower here. The groupBy
-    does map-side partial min, so the shuffle carries one 128-value row per
-    doc regardless of shingle count. The 128 aggregates go to the JVM
-    as one SQL select list (:data:`_PERM_MINS`); :func:`_perm_mins` says
-    why they are text and not Columns."""
-    hashed = index.select("doc_id", F.xxhash64("sh").alias("h64"))
-    return hashed.groupBy("doc_id").agg(_wide(_PERM_MINS)).select("doc_id", "_w.*")
+def _shingle_stream(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(doc_id, _p, sh): one row per shingle OCCURRENCE (multiset —
+    consumers dedupe), the n-char substring that starts at 0-based
+    offset ``_p``. Whole-stage-codegen explode+substring — the r10
+    optimization replacing the interpreted transform(sequence) +
+    array_distinct(string array) path (guide §4.1: built-ins beat
+    interpreted higher-order lambdas). The Generate emits one document's
+    rows consecutively, starting at ``_p = 0``, which is what
+    :func:`_fold_payload` relies on. The length guard keeps sequence()
+    ascending (an L<n doc would otherwise generate a DESCENDING [0,-1]
+    range)."""
+    return (
+        df.filter(f"length(`{text_col}`) >= {n}")
+        .selectExpr(
+            f"`{id_col}` AS doc_id",
+            f"`{text_col}` AS _t",
+            f"explode(sequence(0, length(`{text_col}`) - {n})) AS _p",
+        )
+        .selectExpr("doc_id", "_p", f"substring(_t, _p + 1, {n}) AS sh")
+    )
 
 
 def _hashed_shingle_stream(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """(doc_id, _p, h64): one row per shingle OCCURRENCE (multiset —
-    consumers dedupe), hashed with xxhash64 over the n-char substring
-    that starts at 0-based offset ``_p``. Whole-stage-codegen
-    explode+substring+hash — the r10 optimization replacing the
-    interpreted transform(sequence)+array_distinct(string array) path,
-    which materialized every shingle STRING per doc before hashing
-    (guide §4.1: built-ins beat interpreted higher-order lambdas). The
-    Generate emits one document's rows consecutively, starting at
-    ``_p = 0``, which is what :func:`_fold_payload` relies on. The length
-    guard keeps sequence() ascending (an L<n doc would otherwise generate
-    a DESCENDING [0,-1] range)."""
-    return (
-        df.filter(F.length(F.col(text_col)) >= n)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("_t"),
-            F.explode(F.sequence(F.lit(0), F.length(F.col(text_col)) - n)).alias("_p"),
-        )
-        .select("doc_id", "_p", F.xxhash64(F.expr(f"substring(_t, _p + 1, {n})")).alias("h64"))
-    )
+    """(doc_id, _p, h64): :func:`_shingle_stream` with each shingle
+    hashed by xxhash64 in the same codegen stage, so no shingle string
+    outlives its row."""
+    return _shingle_stream(df, id_col, text_col, n).selectExpr("doc_id", "_p", "xxhash64(sh) AS h64")
+
+
+# An empty signature bin: above every permutation minimum (< P) and
+# every OPH value (< 2^57).
+_EMPTY = (1 << 63) - 1
+
+
+def _minhash_mins(h, seg, nseg: int):
+    """The MinHash signature reduction: per document, for each of the
+    NUM_PERM permutations, the min over its hashes of
+    ``(a_i * (h64 mod 2^32) + b_i) mod P`` (int64-exact: a_i < 2^30 and
+    h32 < 2^32, so every term is below 2^63).
+
+    Like every signature reduction :func:`_fold_payload` takes: ``h`` is
+    one Arrow batch's non-null int64 hashes, ``seg`` their document's
+    index in the batch (non-decreasing), ``nseg`` the batch's document
+    count; returns the NUM_PERM x nseg int64 bin minima, :data:`_EMPTY`
+    where no hash reached a bin. ``np.minimum.reduceat`` over each
+    document's run of columns."""
+    import numpy as np
+
+    out = np.full((NUM_PERM, nseg), _EMPTY, dtype=np.int64)
+    starts = np.searchsorted(seg, np.arange(nseg))
+    filled = np.diff(starts, append=len(seg)) > 0
+    if filled.any():
+        a = np.array(_PERM_A, dtype=np.int64)[:, None]
+        b = np.array(_PERM_B, dtype=np.int64)[:, None]
+        out[:, filled] = np.minimum.reduceat((a * (h & 0xFFFFFFFF) + b) % _MERSENNE_P, starts[filled], axis=1)
+    return out
+
+
+def _oph_mins(h, seg, nseg: int):
+    """The One-Permutation-Hashing signature reduction (Li/Owen/Zhang,
+    NIPS 2012): ONE hash per shingle instead of NUM_PERM multiply-mods.
+    The low 7 bits of h64 pick one of the NUM_PERM bins, the other 57
+    (``h64 >>> 7``) are the value, and each bin keeps its minimum value.
+    A short document leaves bins empty; the fold densifies them by
+    rotation when it emits the row. Same contract as
+    :func:`_minhash_mins`."""
+    import numpy as np
+
+    out = np.full(nseg * NUM_PERM, _EMPTY, dtype=np.int64)
+    values = (h.view(np.uint64) >> np.uint64(7)).astype(np.int64)
+    np.minimum.at(out, seg * NUM_PERM + (h & (NUM_PERM - 1)), values)
+    return np.ascontiguousarray(out.reshape(nseg, NUM_PERM).T)
+
+
+def _densify(mins):
+    """Rotation densification (Shrivastava/Li, ICML 2014) of a NUM_PERM x
+    docs bin-minima matrix: an empty bin takes the nearest non-empty bin
+    to its right, circularly, so two docs with similar shingle sets (and
+    so similar emptiness patterns) borrow the same source bins and the
+    densified collision probability still tracks J. A no-op for the
+    permutation minima, which fill every bin of a document with a hash."""
+    import numpy as np
+
+    empty = mins == _EMPTY
+    if not empty.any():
+        return mins
+    both = np.concatenate((mins, mins))
+    at = np.where(np.concatenate((empty, empty)), 2 * NUM_PERM, np.arange(2 * NUM_PERM)[:, None])
+    nearest = np.minimum.accumulate(at[::-1], axis=0)[::-1][:NUM_PERM]
+    return np.take_along_axis(both, nearest, axis=0)
 
 
 def _fold_payload(
-    docs: DataFrame, id_col: str, stream: Callable[[DataFrame], DataFrame]
+    docs: DataFrame, id_col: str, stream: Callable[[DataFrame], DataFrame],
+    signature: Callable = _minhash_mins,
 ) -> DataFrame:
     """The funnel payload (doc_id, hsh, m0..m127, sz) of every document
-    that ``stream`` generates hash rows for, without a shuffle after the
-    Generate and without an aggregation.
+    that ``stream`` generates a hash for, without a shuffle after the
+    Generate and without an aggregation: the one payload builder of every
+    LSH funnel in the package.
 
     ``stream`` maps a document frame to its (doc_id, _p, h64) Generate:
-    one row per hashed shingle or token, a document's rows consecutive
-    and the first at ``_p = 0`` (:func:`_hashed_shingle_stream`, the
-    router's token stream). The documents are hash-partitioned on
-    ``id_col`` first, with an explicit count (the session's default
-    parallelism) so AQE cannot coalesce a small batch back to one task,
-    and so every row of a doc_id sits in one partition. A ``mapInArrow``
-    fold (:func:`_payload_fold`) then reduces each document's segment to
-    its 128 permutation minima, its sorted distinct hash set and its
-    size, carrying a document that straddles two Arrow batches.
+    one row per shingle or token, a document's rows consecutive and the
+    first at ``_p = 0`` (:func:`_hashed_shingle_stream`, the router's
+    token stream, d3c's pruned stream). A null h64 is a pruned shingle:
+    it keeps its document's place in the stream but adds no hash, and a
+    document whose every hash is null has no payload row. ``signature``
+    is the per-document signature reduction: :func:`_minhash_mins` (the
+    default) or :func:`_oph_mins`.
 
-    Same rows as ``_sig_payload(stream)``, except that ``hsh`` is sorted
-    (every consumer treats it as a set). Where the grouped payload merged
-    repeated doc_ids silently, the fold raises on a null doc_id or on a
-    doc_id that starts a second segment: the funnel's pairs are only
-    meaningful over unique ids."""
+    The documents are hash-partitioned on ``id_col`` first, with an
+    explicit count (the session's default parallelism) so AQE cannot
+    coalesce a small batch back to one task, and so every row of a
+    doc_id sits in one partition. A ``mapInArrow`` fold
+    (:func:`_payload_fold`) then reduces each document's segment to its
+    signature, its sorted distinct hash set and its size, carrying a
+    document that straddles two Arrow batches. The fold raises on a null
+    doc_id or on a doc_id that starts a second segment: the funnel's
+    pairs are only meaningful over unique ids."""
     from functools import partial
 
     parts = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
     rows = stream(parts)
-    # the grouped _sig_payload's types and nullability
     schema = StructType(
         [
             rows.schema["doc_id"],
@@ -252,14 +276,17 @@ def _fold_payload(
             StructField("sz", IntegerType(), False),
         ]
     )
-    return rows.mapInArrow(partial(_payload_fold, schema), schema)
+    return rows.mapInArrow(partial(_payload_fold, schema, signature), schema)
 
 
-def _shingle_payload(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def _shingle_payload(
+    df: DataFrame, id_col: str, text_col: str, n: int, signature: Callable = _minhash_mins
+) -> DataFrame:
     """:func:`_fold_payload` over the character n-gram stream: the payload
-    of d3, d7, d13, d18 and the streaming-dedup batches."""
+    of d3, d3d (``signature=_oph_mins``), d7, d13, d18 and the
+    streaming-dedup batches."""
     return _fold_payload(
-        df, id_col, lambda docs: _hashed_shingle_stream(docs, id_col, text_col, n)
+        df, id_col, lambda docs: _hashed_shingle_stream(docs, id_col, text_col, n), signature
     )
 
 
@@ -268,19 +295,19 @@ def _shingle_payload(df: DataFrame, id_col: str, text_col: str, n: int) -> DataF
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
-def _payload_fold(schema: StructType, batches):
+def _payload_fold(schema: StructType, signature: Callable, batches):
     """The :func:`_fold_payload` kernel, run on the Python workers over one
     partition's (doc_id, _p, h64) Arrow batches.
 
-    Per batch: segment starts are the ``_p == 0`` rows;
-    ``np.minimum.reduceat`` over the 128 x rows matrix
-    ``(a_i * (h64 mod 2^32) + b_i) mod P`` gives each segment's minima
-    (int64-exact: a_i < 2^30 and h32 < 2^32, so every term is below
-    2^63); one lexsort by (segment, hash) and a neighbour compare give
-    each segment's distinct hashes. A batch whose first row has
-    ``_p != 0`` continues the previous batch's last document, so that
-    document is held back (its minima and distinct hashes so far) until
-    the next segment starts or the partition ends."""
+    Per batch: segment starts are the ``_p == 0`` rows, null hashes are
+    dropped after segmenting, ``signature`` reduces the rest to each
+    segment's bin minima, and one lexsort by (segment, hash) plus a
+    neighbour compare gives each segment's distinct hashes. A batch
+    whose first row has ``_p != 0`` continues the previous batch's last
+    document, so that document is held back (its minima and distinct
+    hashes so far) until the next segment starts or the partition ends.
+    A row is emitted with its empty bins densified, and not at all when
+    the document has no hash."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -288,16 +315,18 @@ def _payload_fold(schema: StructType, batches):
 
     out_schema = to_arrow_schema(schema)
     hsh_type = out_schema.field("hsh").type
-    perm_a = np.array(_PERM_A, dtype=np.int64)[:, None]
-    perm_b = np.array(_PERM_B, dtype=np.int64)[:, None]
 
-    def emit(ids, mins, offsets, values):
+    def emit(ids, mins, sizes, values):
+        if not sizes.all():
+            has = sizes > 0
+            ids, mins, sizes = ids.filter(pa.array(has)), mins[:, has], sizes[has]
+        offsets = np.concatenate(([0], np.cumsum(sizes)))
         return pa.RecordBatch.from_arrays(
             [
                 ids,
                 pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(values), type=hsh_type),
-                *(pa.array(m) for m in mins),
-                pa.array(np.diff(offsets).astype(np.int32)),
+                *(pa.array(m) for m in _densify(mins)),
+                pa.array(sizes.astype(np.int32)),
             ],
             schema=out_schema,
         )
@@ -305,7 +334,7 @@ def _payload_fold(schema: StructType, batches):
     def emit_carried(open_doc):
         ids, mins, hashes = open_doc
         values = np.unique(np.concatenate(hashes))
-        return emit(ids, mins[:, None], np.array([0, len(values)]), values)
+        return emit(ids, mins[:, None], np.array([len(values)]), values)
 
     open_doc = None  # (doc_id slice, minima so far, [distinct hash arrays])
     starts_seen = []
@@ -317,7 +346,6 @@ def _payload_fold(schema: StructType, batches):
         if ids.null_count:
             raise ValueError("MinHash payload: null doc_id")
         p = batch.column("_p").to_numpy()
-        h = batch.column("h64").to_numpy()
         is_start = p == 0
         cont = not is_start[0]
         if cont and open_doc is None:
@@ -342,36 +370,40 @@ def _payload_fold(schema: StructType, batches):
                     "than the one the previous batch left open"
                 )
         seg = np.cumsum(is_start) - (0 if cont else 1)
-        mins = np.minimum.reduceat((perm_a * (h & 0xFFFFFFFF) + perm_b) % _MERSENNE_P, bounds, axis=1)
+        h = batch.column("h64")
+        if h.null_count:  # pruned shingles: their rows segment, their hashes go
+            seg = seg[h.is_valid().to_numpy(zero_copy_only=False)]
+            h = h.drop_null()
+        h = h.to_numpy()
+        mins = signature(h, seg, len(bounds))
         order = np.lexsort((h, seg))
         hs, ss = h[order], seg[order]
-        keep = np.ones(n, dtype=bool)
+        keep = np.ones(len(h), dtype=bool)
         keep[1:] = (hs[1:] != hs[:-1]) | (ss[1:] != ss[:-1])
         values = hs[keep]
-        offsets = np.zeros(len(bounds) + 1, dtype=np.int64)
-        np.cumsum(np.bincount(ss[keep], minlength=len(bounds)), out=offsets[1:])
+        sizes = np.bincount(ss[keep], minlength=len(bounds))
+        offsets = np.concatenate(([0], np.cumsum(sizes)))
 
         first, last = int(cont), len(bounds) - 1
         if cont:
             open_doc[1][:] = np.minimum(open_doc[1], mins[:, 0])
-            open_doc[2].append(values[offsets[0]:offsets[1]])
+            open_doc[2].append(values[:offsets[1]])
             if last == 0:
                 continue  # the whole batch continues the open document
             yield emit_carried(open_doc)
         elif open_doc is not None:
             yield emit_carried(open_doc)
         if last > first:
-            lo, hi = offsets[first], offsets[last]
             yield emit(
                 ids.take(pa.array(bounds[first:last])),
                 mins[:, first:last],
-                offsets[first:last + 1] - lo,
-                values[lo:hi],
+                sizes[first:last],
+                values[offsets[first]:offsets[last]],
             )
         open_doc = (
             ids.slice(bounds[last], 1),
             mins[:, last].copy(),
-            [values[offsets[last]:offsets[last + 1]]],
+            [values[offsets[last]:]],
         )
     if open_doc is not None:
         yield emit_carried(open_doc)
@@ -384,31 +416,6 @@ def _payload_fold(schema: StructType, batches):
                 f"MinHash payload: doc_id {repeated[0]} names more than one "
                 "document; the payload needs unique doc_ids"
             )
-
-
-def _sig_payload(index_h: DataFrame) -> DataFrame:
-    """ONE aggregation producing everything the funnel consumes per doc:
-    (doc_id, hsh = distinct shingle-hash set, m0..m127, sz = |hsh|), for a
-    (doc_id, h64) stream in any row order. Its one caller is d3c, whose
-    stream comes out of a shingle join and so is not doc-contiguous;
-    every stream that comes straight from a Generate over a document
-    frame takes the shuffle-free :func:`_fold_payload` instead.
-
-    ``sz`` counts DISTINCT 64-bit shingle hashes where the old path
-    counted distinct shingle strings; an intra-doc xxhash64 collision
-    (odds ~L²/2^64 ≈ 2e-13 per doc) would shrink it by one — the same
-    accepted tolerance class as the hashed verify intersections
-    (~5e-15/pair), documented there since round 1.
-
-    The aggregates are one SQL select list (:data:`_PERM_MINS`). Built
-    from Columns they cost ~9k py4j calls, about 1 s of driver time per
-    build; as text the build is a few dozen calls."""
-    return (
-        index_h.groupBy("doc_id")
-        .agg(_wide(f"collect_set(h64) AS hsh, {_PERM_MINS}"))
-        .select("doc_id", "_w.*")
-        .withColumn("sz", F.size("hsh"))
-    )
 
 
 def _cand_pairs(buckets: DataFrame, min_bands: int) -> DataFrame:
@@ -431,21 +438,6 @@ def _band_buckets(signatures: DataFrame, rows: int = 2) -> DataFrame:
     signature columns, band_hash = xxhash64 of the band's minima."""
     return signatures.selectExpr("doc_id", _BANDS[rows]).select(
         "doc_id", "bk.band_id", "bk.band_hash"
-    )
-
-
-def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
-    """Band the signature (BANDS bands of r rows), bucket-join within bands.
-    Only docs sharing a (band, band-hash) bucket become candidate pairs —
-    the step that makes near-dup detection near-linear at 100 TB."""
-    buckets = _band_buckets(signatures)
-    left = buckets.select(F.col("doc_id").alias("doc_id_a"), "band_id", "band_hash")
-    right = buckets.select(F.col("doc_id").alias("doc_id_b"), "band_id", "band_hash")
-    return (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-        .distinct()
     )
 
 
@@ -547,10 +539,10 @@ def _payload_funnel(
     payload: DataFrame, threshold: float, int_pred: tuple[int, int] | None = None
 ) -> DataFrame:
     """The shared band -> band-count -> merged est+verify funnel over a
-    prepared (doc_id, hsh, m0..m{NUM_PERM-1}, sz) payload frame: the
-    fold's (:func:`_fold_payload`) for d3/d13/d18 and the router's LSH
-    leg, the grouped :func:`_sig_payload` for d3c, :func:`_oph_payload`
-    for d3d.
+    prepared (doc_id, hsh, m0..m{NUM_PERM-1}, sz) payload frame, built
+    by :func:`_fold_payload` for every caller: d3/d13/d18 and the
+    router's LSH leg (permutation minima), d3d (OPH) and d3c (DF-pruned
+    stream).
 
     The payload feeds FIVE consumers (banding, est sides a and b, and
     both verify-side hsh/sz projections in _verify_jaccard — ADVICE r10
@@ -569,99 +561,6 @@ def _payload_funnel(
     )
 
 
-def oph_signatures(index: DataFrame) -> DataFrame:
-    """One-Permutation-Hashing MinHash signature (Li/Owen/Zhang, NIPS 2012)
-    with rotation densification (Shrivastava/Li, ICML 2014): ONE hash per
-    shingle instead of NUM_PERM multiply-mods.
-
-    Each shingle hashes once; the low 7 bits pick one of NUM_PERM=128 bins
-    and the remaining 57 bits are the rank value. The signature is the
-    per-bin minimum; an empty bin borrows the nearest non-empty bin to its
-    right (circular rotation), so two docs with similar shingle sets —
-    hence similar emptiness patterns — borrow the same source bins and the
-    densified collision probability still tracks J.
-
-    Two-level aggregation keeps the per-shingle cost O(1):
-
-      stage 1  groupBy(doc_id, bin) -> min(val): map-side combine collapses
-               each partition to <= NUM_PERM rows/doc before the shuffle,
-               so shuffle volume matches minhash_signatures' while the
-               per-shingle compute drops ~NUM_PERM-fold.
-      stage 2  groupBy(doc_id) pivots <= NUM_PERM bin rows into the m0..m127
-               columns (the conditional-min expressions run over bin rows,
-               not shingle rows).
-      densify  doc-grain array pass: m_i = first non-null among
-               r_i, r_{i+1 mod 128}, ... via slice+filter over a doubled
-               array — interpreted higher-order ops, but over docs x 128
-               elements only, off the shingle-mass hot path.
-
-    vs minhash_signatures: the Omega(shingles x NUM_PERM) signature floor
-    SCALE.md documents for d3 becomes Omega(shingles) + Theta(docs x
-    NUM_PERM^2) — at 100 TB (shingle mass >> doc count) that floor is the
-    whole game. Downstream banding/est/verify is unchanged and the output
-    stays exact-verified, so recall loss shows up as a hash mismatch
-    against the exact-Jaccard oracle rather than silent corruption.
-    """
-    return _oph_signatures_hashed(
-        index.select("doc_id", F.xxhash64("sh").alias("h64"))
-    )
-
-
-def _oph_signatures_hashed(index_h: DataFrame) -> DataFrame:
-    """:func:`oph_signatures` over an already-hashed (doc_id, h64) stream
-    (xxhash64 of the shingle string — identical values either way), so
-    the codegen shingle stream feeds OPH without re-materializing
-    strings."""
-    partial = (
-        index_h.selectExpr("doc_id", *_OPH_BIN_V)
-        .groupBy("doc_id", "bin")
-        .agg(F.min("v").alias("mv"))
-    )
-    raw = partial.groupBy("doc_id").agg(_wide(_OPH_BINS)).select("doc_id", "_w.*")
-    return _oph_densify(raw)
-
-
-def _oph_densify(raw: DataFrame, carry: list[str] | None = None) -> DataFrame:
-    """Rotation densification of a pivoted (doc_id, r0..r127[, carry...])
-    bin-min frame into the funnel's m0..m127 signature columns: m_i =
-    first non-null among r_i, r_{i+1 mod NUM_PERM}, ... via slice+filter
-    over a doubled array (interpreted higher-order ops, but over docs x
-    NUM_PERM elements only — off the shingle-mass hot path). SQL text
-    (:data:`_OPH_DENSE`): as Columns, the 128 ``filter`` lambdas alone
-    were thousands of py4j calls per build."""
-    keep = ["doc_id", *(carry or [])]
-    return (
-        raw.select(*keep, F.expr(_OPH_RR))
-        .select(*keep, _wide(_OPH_DENSE))
-        .select(*keep, "_w.*")
-    )
-
-
-def _oph_payload(index_h: DataFrame) -> DataFrame:
-    """ONE two-level aggregation producing the funnel payload (doc_id,
-    hsh, sz, m0..m127) with OPH signatures — the r11 restructure of
-    minhash_lsh_dedup_oph's payload build (guide §1.2 and ADVICE r10):
-    the r10 shape PERSISTED the Θ(shingle-mass) (doc_id, h64) stream and
-    ran two separate aggregations over it (the OPH two-level min and a
-    collect_set pass) joined back together — a corpus-sized cache
-    (~16 B/char) plus an extra full pass plus a per-doc join. Here
-    stage 1's groupBy(doc_id, bin) computes min(v) AND collect_set(h64)
-    together; because bin = pmod(h64, NUM_PERM) is a FUNCTION of h64,
-    equal hashes land in one bin and distinct hashes never collide
-    across bins, so the per-bin distinct sets are disjoint and stage 2's
-    flatten(collect_list(hs)) IS the per-doc distinct hash set — no
-    array_distinct, no join, no shingle-mass persist anywhere."""
-    partial = (
-        index_h.selectExpr("doc_id", *_OPH_BIN_V, "h64")
-        .groupBy("doc_id", "bin")
-        .agg(F.min("v").alias("mv"), F.collect_set("h64").alias("hs"))
-    )
-    raw = partial.groupBy("doc_id").agg(
-        _wide(f"{_OPH_BINS}, flatten(collect_list(hs)) AS hsh")
-    ).select("doc_id", "_w.*")
-    return _oph_densify(raw, carry=["hsh"]).withColumn("sz", F.size("hsh"))
-
-
 def minhash_lsh_dedup_oph(
     df: DataFrame, threshold: float = 0.5, n: int = 5,
     id_col: str = "doc_id", text_col: str = "text",
@@ -669,18 +568,17 @@ def minhash_lsh_dedup_oph(
     """minhash_lsh_dedup with OPH signatures: same banding, same band-count
     and signature-agreement prefilters, same exact-Jaccard verification —
     the only change is the signature stage's per-shingle cost (one hash vs
-    NUM_PERM multiply-mods; see oph_signatures). Output contract is
+    NUM_PERM multiply-mods; see :func:`_oph_mins`). Output contract is
     unchanged: equals ngram_jaccard_pairs at the same threshold.
 
-    r11 physical shape: ONE codegen shingle-hash stream feeds ONE
-    two-level payload aggregation (:func:`_oph_payload`) computing the
-    OPH bin mins AND the verify hash set in the same stage-1 groupBy —
-    no shingle-mass persist, no extra pass, no per-doc join (the r10
-    shape carried all three; ADVICE r10 flagged the Θ(shingle-mass)
-    cache)."""
-    return _payload_funnel(
-        _oph_payload(_hashed_shingle_stream(df, id_col, text_col, n)), threshold
-    )
+    vs the permutation minima, the Omega(shingles x NUM_PERM) signature
+    floor SCALE.md documents for d3 becomes Omega(shingles) + Theta(docs
+    x NUM_PERM) for the densify; at 100 TB (shingle mass >> doc count)
+    that floor is the whole game. The payload is d3's map-local fold
+    with the OPH reduction: no shuffle after the Generate, no
+    aggregation. Recall loss from densification would show up as a hash
+    mismatch against the exact-Jaccard oracle, not silent corruption."""
+    return _payload_funnel(_shingle_payload(df, id_col, text_col, n, _oph_mins), threshold)
 
 
 def _est_filter(
@@ -765,35 +663,51 @@ def minhash_lsh_dedup_dfpruned(
     J in [0.15, 0.5) templated mass whose candidate pairs are the measured
     quadratic floor of the exact funnel (SCALE.md round-4 d3 sweep).
 
-    The DF cut itself is one groupBy on the shingle key (map-side combined)
-    plus one shuffle-hash equi-join back to the index — linear, and
-    comparison is integer-exact (``df * 100 <= pct * n_docs``) so the
-    DuckDB oracle replicates the kept set bit-for-bit. Everything
-    downstream reuses the exact funnel's machinery and inherits its
-    exactness bounds relative to pruned-set Jaccard.
+    The DF count is one groupBy on the shingle STRING (map-side combined;
+    integer-exact cut ``df * 100 > pct * n_docs``, so the DuckDB oracle
+    replicates the pruned set bit-for-bit; hashing the DF key would merge
+    counts on 64-bit collisions, a real effect at 100 TB's ~1e12 distinct
+    shingles). See :func:`_dfpruned_payload` for how the cut reaches the
+    payload. Everything downstream reuses the exact funnel's machinery
+    and inherits its exactness bounds relative to pruned-set Jaccard.
     """
-    idx0 = shingle_index(df, id_col, text_col, n)
-    n_docs = df.agg(F.count("*").alias("n_docs"))
-    dfreq = idx0.groupBy("sh").agg(F.count("*").alias("dfq"))
-    kept_sh = (
-        dfreq.crossJoin(F.broadcast(n_docs))
-        .filter(F.col("dfq") * 100 <= F.lit(max_df_pct) * F.col("n_docs"))
-        .select("sh")
+    return _payload_funnel(_dfpruned_payload(df, id_col, text_col, n, max_df_pct), threshold)
+
+
+def _dfpruned_payload(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_df_pct: int
+) -> DataFrame:
+    """The payload of d3c: :func:`_fold_payload` over the shingle stream
+    with every FREQUENT shingle's hash nulled (a shingle in more than
+    ``max_df_pct``% of documents), so the fold skips it. A document whose
+    every shingle is frequent has no payload row, and so no pair, as in
+    the oracle, where such a document has no rows in the pruned CTE.
+
+    The stream is a LEFT OUTER join against the frequent set, broadcast:
+    each frequent shingle sits in more than ``pct/100 x n_docs``
+    documents, so the set holds fewer than ``100/pct x`` (mean distinct
+    shingles per doc) strings, whatever the corpus size (625 strings at
+    sf0.1, against a bound of ~2k). A broadcast hash join streams its
+    probe side in order, so each document's rows stay consecutive for
+    the fold."""
+    n_docs = df.selectExpr("count(*) AS n_docs")
+    frequent = (
+        shingle_index(df, id_col, text_col, n)
+        .groupBy("sh")
+        .agg(F.expr("count(*) AS dfq"))
+        .crossJoin(F.broadcast(n_docs))
+        .filter(f"dfq * 100 > {max_df_pct} * n_docs")
+        .selectExpr("sh", "true AS _frequent")
     )
-    # Rare shingles are the numerous ones — the kept set does NOT broadcast;
-    # plain shuffle-hash equi-join on the shingle key.  The DF cut stays
-    # keyed on the shingle STRING (integer-exact kept set, oracle
-    # replicates it bit-for-bit; hashing the DF key would merge counts on
-    # 64-bit collisions, a real effect at 100 TB's ~1e12 distinct
-    # shingles).  Everything AFTER the cut is hashed immediately and the
-    # funnel runs on longs: one combined payload aggregation replaces the
-    # r09 shape's separately-persisted string index + signature agg +
-    # collect_list agg (r10; guide §1.2 — docs whose every shingle was
-    # pruned vanish from the stream and therefore from the payload and
-    # output, matching the oracle, where such docs have no rows in the
-    # pruned CTE).
-    idx_h = idx0.join(kept_sh, "sh").select("doc_id", F.xxhash64("sh").alias("h64"))
-    return _payload_funnel(_sig_payload(idx_h), threshold)
+
+    def stream(docs: DataFrame) -> DataFrame:
+        return (
+            _shingle_stream(docs, id_col, text_col, n)
+            .join(F.broadcast(frequent), "sh", "left")
+            .selectExpr("doc_id", "_p", "IF(_frequent IS NULL, xxhash64(sh), NULL) AS h64")
+        )
+
+    return _fold_payload(df, id_col, stream)
 
 
 def minhash_lsh_incremental(
@@ -1904,13 +1818,12 @@ def paragraph_neardup_dedup(
     # r11 negative result (VERDICT r10 task 4 proposed routing this
     # funnel through OPH signatures): MEASURED SLOWER at window grain —
     # d18 25.0 s -> 29.2 s at sf0.1 (min-of-2, same box/protocol) with
-    # the restructured _oph_payload, vs d3d's 22.7 -> 17.5 s gain on
-    # doc grain. At window grain the per-group state is small (~150
-    # chars/window), so the then-grouped _sig_payload's ONE groupBy beat
-    # OPH's two aggregation levels: the extra (wid, bin)-grain shuffle +
-    # ObjectHashAggregate outweighed replacing 128 multiply-mods/shingle
-    # with one hash. Kept on the exact funnel, whose payload is now the
-    # shuffle-free fold (_fold_payload).
+    # the then two-level OPH payload aggregation, vs d3d's 22.7 -> 17.5 s
+    # gain on doc grain: at ~150 chars/window the extra (wid, bin)-grain
+    # shuffle outweighed replacing 128 multiply-mods/shingle with one
+    # hash. Both payloads are now the same shuffle-free fold
+    # (_fold_payload), so that measurement no longer applies; d18 stays
+    # on the permutation minima until it is re-measured.
     pairs = minhash_lsh_dedup(wdocs, threshold=threshold, n=n)
     labels = neardup_clusters_star(wdocs, pairs).select(
         F.col("doc_id").alias("wid"), "cluster_id"

@@ -24,19 +24,20 @@ written, before any batch dir exists, and every later write and probe
 resolves it from there; :data:`N_BUCKETS` only seeds new indexes. The
 file is written once (an atomic replace) and compaction never touches it.
 
-Replay guard. A probe reads with ``before_batch=<batch_id>``, a partition
-filter ``batch < before_batch`` that Spark applies while planning the
-scan. A replayed batch therefore never counts the rows its first attempt
-landed, and never opens the files that its own overwrite deletes, so the
-batch's output and index writes may run concurrently with the probe's
-consumers.
+Replay guard. A probe reads with ``before_batch=<batch_id>``, and the
+reader hands Spark only the ``batch=<id>`` dirs with ``id <
+before_batch``. A replayed batch therefore never counts the rows its
+first attempt landed, and never lists or opens the files that its own
+overwrite deletes, so the batch's output and index writes may run
+concurrently with the probe's consumers.
 
 Layout errors. A kbucketed index with batch dirs but no ``_meta.json``,
 with an unparseable ``_meta.json``, or whose kbucketed table holds
 parquet files directly in a batch dir has no known modulus. This module
 never writes such a state; :func:`layout` raises
 :class:`IndexLayoutError` ("rebuild the index") before anything is read
-or written.
+or written. So does a ``_meta.json`` whose bytes fail their Hadoop
+checksum.
 
 All metadata I/O goes through ``streaming.fsio`` (Hadoop FileSystem
 resolved from the path), so an index can live on any Spark-reachable
@@ -105,6 +106,8 @@ def layout(
     if fsio.exists(meta):
         try:
             n = int(json.loads(fsio.read_text(meta))["n_doc_buckets"])
+        except fsio.ChecksumError:
+            raise _rebuild(index_path, f"{META} fails its checksum") from None
         except (ValueError, KeyError, TypeError):
             raise _rebuild(index_path, f"{META} holds no bucket count") from None
     elif any(batches.values()):
@@ -122,8 +125,21 @@ def layout(
     return Layout(n, batches)
 
 
-def _scan(spark: SparkSession, table: str) -> DataFrame:
-    return spark.read.option("basePath", table).parquet(os.path.join(table, "batch=*"))
+def _scan(spark: SparkSession, table: str, ids: list[int]) -> DataFrame | None:
+    """The rows of ``table``'s ``batch=<id>`` dirs in ``ids``, named one by
+    one (a ``batch=*`` glob costs Spark a failed lookup of the literal
+    path first); None when those dirs hold no data file, as a 0-row
+    write of a kbucketed table leaves a batch dir with only
+    ``_SUCCESS``."""
+    from pyspark.errors import AnalysisException
+
+    dirs = [os.path.join(table, f"batch={i}") for i in ids]
+    try:
+        return spark.read.option("basePath", table).parquet(*dirs)
+    except AnalysisException as e:
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
+            return None
+        raise
 
 
 def read(
@@ -137,13 +153,12 @@ def read(
 ) -> DataFrame | None:
     """One table's rows of every batch below ``before_batch`` (of every
     batch when None), partition-pruned to the ``__kbucket`` values in
-    ``buckets`` when given; None when the table has no such batch."""
-    ids = lay.batches[name]
-    if not ids or (before_batch is not None and ids[0] >= before_batch):
+    ``buckets`` when given; None when the table has no such batch or
+    those batches hold no row."""
+    ids = [i for i in lay.batches[name] if before_batch is None or i < before_batch]
+    df = _scan(spark, os.path.join(index_path, name), ids) if ids else None
+    if df is None:
         return None
-    df = _scan(spark, os.path.join(index_path, name))
-    if before_batch is not None:
-        df = df.filter(F.col("batch") < before_batch)
     if buckets is not None:
         df = df.filter(F.col(KB).isin(buckets))
     return df.drop("batch", KB)
@@ -233,9 +248,12 @@ def compact(spark: SparkSession, index_path: str, tables: dict[str, str | None])
         if not staged:
             if len(batches) <= 1:
                 continue
+            df = _scan(spark, table, lay.batches[name])
+            if df is None:
+                continue  # no rows to merge
+            df = df.drop("batch")
             files = _parquet_files(table)
             files_before = len(files)
-            df = _scan(spark, table).drop("batch")
             if key is None:
                 # ~128 MB files: fewer files at small scale, no monster
                 # files at large

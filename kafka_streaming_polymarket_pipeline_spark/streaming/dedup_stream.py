@@ -175,8 +175,9 @@ def incremental_pairs_against_index(
     )
     corpus_sigs = batchdir.read(spark, index_path, lay, SIGS, before_batch, buckets=touched)
     corpus_hashed = batchdir.read(spark, index_path, lay, HASHED, before_batch, buckets=touched)
-    sigs = corpus_sigs.union(new_sigs)
-    hashed = corpus_hashed.union(new_hashed)
+    # None when every earlier batch was empty (no kbucketed file to read)
+    sigs = new_sigs if corpus_sigs is None else corpus_sigs.union(new_sigs)
+    hashed = new_hashed if corpus_hashed is None else corpus_hashed.union(new_hashed)
     return D._verify_jaccard(D._est_filter(cand, sigs, est_cutoff), hashed, threshold)
 
 

@@ -139,7 +139,15 @@ def rename(src: str, dst: str) -> None:
         raise OSError(f"rename failed: {src} -> {dst}")
 
 
+class ChecksumError(OSError):
+    """A file's bytes do not match its Hadoop checksum (``.crc``) sidecar."""
+
+
 def read_text(path: str) -> str:
+    """The file's text; raises :class:`ChecksumError` when the filesystem
+    verifies checksums and the bytes fail them."""
+    from py4j.protocol import Py4JJavaError
+
     if _local_only(path):
         with open(path, encoding="utf-8") as f:
             return f.read()
@@ -147,6 +155,10 @@ def read_text(path: str) -> str:
     stream = fs.open(jpath)
     try:
         return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException":
+            raise ChecksumError(f"{path}: {e.java_exception.getMessage()}") from None
+        raise
     finally:
         stream.close()
 

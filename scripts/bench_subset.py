@@ -4,13 +4,17 @@ min over N passes, cache cleared between runs). For optimization-round
 before/after probes; the official number stays bench.py's.
 
 Usage: python scripts/bench_subset.py name1,name2,... [runs]
+
+Runs at local[SPARK_GRAFT_CPUS], by default one slot per CPU of the host,
+and prints the ``cpus`` it ran at with the timings: compare two runs only
+at the same value.
 """
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_streaming_polymarket_pipeline_spark import plans  # noqa: E402
 from kafka_streaming_polymarket_pipeline_spark.session import get_spark  # noqa: E402
@@ -19,7 +23,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 names = sys.argv[1].split(",")
 runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
-cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 spark = get_spark(app_name="bench-subset", cpus=cpus, shuffle_partitions=cpus)
 spark.sparkContext.setLogLevel("ERROR")
 spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -34,5 +38,5 @@ for _pass in range(runs):
         if name not in timings or dt < timings[name]:
             timings[name] = dt
         spark.catalog.clearCache()
-print(json.dumps({n: round(v, 3) for n, v in timings.items()}))
+print(json.dumps({"cpus": cpus, **{n: round(v, 3) for n, v in timings.items()}}))
 spark.stop()

@@ -45,23 +45,26 @@ def _files(root) -> list[str]:
     return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
 
 
-@pytest.mark.parametrize("state", ["no_meta", "truncated_meta", "flat_kbucketed_table"])
+@pytest.mark.parametrize(
+    "state", ["no_meta", "truncated_meta", "truncated_meta_with_crc", "flat_kbucketed_table"]
+)
 def test_unknown_layout_fails_loudly_before_any_write(spark, tmp_path, state):
-    """Batch dirs without _meta.json, an unparseable _meta.json, and a
-    kbucketed table whose batch dir holds parquet files directly all
-    leave the bucket count unknown. Writing and probing both raise the
-    "rebuild the index" error, and no file lands."""
+    """Batch dirs without _meta.json, an unparseable _meta.json (with or
+    without its Hadoop checksum sidecar, which then rejects the bytes),
+    and a kbucketed table whose batch dir holds parquet files directly
+    all leave the bucket count unknown. Writing and probing both raise
+    the "rebuild the index" error, and no file lands."""
     idx = str(tmp_path / "idx")
     DS.write_index_batch(spark.createDataFrame(BATCH_A, SCHEMA), idx, 0)
     meta = os.path.join(idx, batchdir.META)
     if state == "no_meta":
         os.remove(meta)
-    elif state == "truncated_meta":
+    elif state.startswith("truncated_meta"):
         with open(meta, "w") as f:
             f.write('{"n_doc_buc')
-        # drop Hadoop's checksum sidecar, which would reject the edit
-        # before the content is parsed
-        os.remove(os.path.join(idx, f".{batchdir.META}.crc"))
+        if state == "truncated_meta":
+            # without the sidecar the content itself fails to parse
+            os.remove(os.path.join(idx, f".{batchdir.META}.crc"))
     else:  # move sigs' batch-0 files up out of their __kbucket= dirs
         b0 = os.path.join(idx, DS.SIGS, "batch=0")
         for kb in [d for d in os.listdir(b0) if d.startswith(batchdir.KB)]:
@@ -75,6 +78,20 @@ def test_unknown_layout_fails_loudly_before_any_write(spark, tmp_path, state):
     with pytest.raises(batchdir.IndexLayoutError, match="rebuild the index"):
         DS.incremental_pairs_against_index(new, idx)
     assert _files(tmp_path) == before
+
+
+def test_empty_first_batch_reads_as_no_batch(spark, tmp_path):
+    """A 0-row first batch leaves the kbucketed tables' batch=0 dirs with
+    no data file; a later probe reads them as no batch at all and finds
+    the pairs among its own documents."""
+    idx = str(tmp_path / "idx")
+    DS.write_index_batch(spark.createDataFrame([], SCHEMA), idx, 0)
+    lay = batchdir.layout(idx, DS.TABLES)
+    assert lay.batches[DS.SIGS] == [0]
+    assert batchdir.read(spark, idx, lay, DS.SIGS, before_batch=1) is None
+    batch = spark.createDataFrame(BATCH_A[:2], SCHEMA)
+    pairs = DS.incremental_pairs_against_index(batch, idx, before_batch=1).collect()
+    assert [(r["doc_id_a"], r["doc_id_b"], r["jaccard"]) for r in pairs] == [(0, 1, 1.0)]
 
 
 # sink -> (start(stream, root), output dirs, index tables)

@@ -66,15 +66,15 @@ def test_oph_lsh_matches_exact(planted):
     assert oph == exact and exact
 
 
-def test_oph_signatures_dense_and_deterministic(planted, spark):
+def test_oph_signatures_dense_and_deterministic(spark):
     # Short docs (<128 shingles) force empty bins; rotation densification
     # must fill every one of the 128 columns, and two docs with identical
     # text must produce identical signatures.
     dup = spark.createDataFrame(
         [(10, "tiny text"), (11, "tiny text")], "doc_id long, text string"
     )
-    sigs = D.oph_signatures(D.shingle_index(dup)).collect()
-    by_id = {r["doc_id"]: [r[f"m{i}"] for i in range(D.NUM_PERM)] for r in sigs}
+    sigs = D._shingle_payload(dup, "doc_id", "text", 5, D._oph_mins).collect()
+    by_id = {r["doc_id"]: _sig(r) for r in sigs}
     assert all(v is not None for v in by_id[10])  # densified: no holes
     assert by_id[10] == by_id[11]  # content-determined
 
@@ -301,10 +301,17 @@ WORDS = (
 ).split()
 
 
+def _stream_hashes(docs) -> dict[int, set[int]]:
+    """Per doc, the set of its hashes in the (doc_id, _p, h64) stream."""
+    hashes: dict[int, set[int]] = {}
+    for r in D._hashed_shingle_stream(docs, "doc_id", "text", 5).collect():
+        hashes.setdefault(r["doc_id"], set()).add(r["h64"])
+    return hashes
+
+
 @pytest.fixture(scope="module")
 def seeded_stream(spark):
-    """Seeded documents, their (doc_id, _p, h64) shingle-hash stream and,
-    per doc, the set of its hashes as collected from that stream. Doc
+    """Seeded documents and, per doc, the set of its shingle hashes. Doc
     lengths run from fewer shingles than OPH bins (empty bins to densify)
     to a few hundred."""
     import random
@@ -317,11 +324,7 @@ def seeded_stream(spark):
         ],
         "doc_id long, text string",
     )
-    stream = D._hashed_shingle_stream(docs, "doc_id", "text", 5)
-    hashes: dict[int, set[int]] = {}
-    for r in stream.collect():
-        hashes.setdefault(r["doc_id"], set()).add(r["h64"])
-    return docs, stream, hashes
+    return docs, _stream_hashes(docs)
 
 
 def _sig(row) -> list[int]:
@@ -337,55 +340,31 @@ def _minhash_reference(hs: set[int]) -> list[int]:
     ]
 
 
-def test_sig_payload_matches_python_reference(spark, seeded_stream):
-    """The payload's signature, hash set and size against a Python
-    reference over the collected stream, for the grouped payload and the
-    map-local fold. Guards the SQL text's literal types and operator
-    precedence, and the fold's int64 arithmetic, which the exact-Jaccard
-    pair oracles would only catch if a pair flipped. The fold runs on
-    7-row Arrow batches, so most documents straddle two or more batches
-    and the carry between batches is exercised."""
-    docs, stream, hashes = seeded_stream
-    want = {doc: _minhash_reference(hs) for doc, hs in hashes.items()}
+def _small_batches(spark, build):
+    """Collect ``build()`` on 7-row Arrow batches, so most documents
+    straddle two or more batches and the fold's carry is exercised."""
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        folded = D._shingle_payload(docs, "doc_id", "text", 5).collect()
+        return build().collect()
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    for rows in (D._sig_payload(stream).collect(), folded):
-        assert len(rows) == len(hashes)
-        assert {r["doc_id"]: _sig(r) for r in rows} == want
-        assert {r["doc_id"]: (r["sz"], set(r["hsh"])) for r in rows} == {
-            doc: (len(hs), hs) for doc, hs in hashes.items()
-        }
 
 
-@pytest.mark.parametrize(
-    "rows, message",
-    [
-        ([(1, "repeated document one"), (2, "another document"), (1, "repeated document two")],
-         "doc_id 1 names more than one document"),
-        ([(None, "a document without an id"), (2, "another document")], "null doc_id"),
-    ],
-)
-def test_fold_payload_rejects_repeated_and_null_doc_ids(spark, rows, message):
-    """The fold's precondition is unique, non-null doc_ids: where the
-    grouped payload merged a repeated id's documents into one signature,
-    the fold fails the job."""
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    with pytest.raises(Exception, match=message):
-        D._shingle_payload(docs, "doc_id", "text", 5).collect()
+def _hash_sets(rows) -> dict:
+    return {r["doc_id"]: (r["sz"], set(r["hsh"])) for r in rows}
 
 
-def test_minhash_signatures_match_python_reference(planted):
-    """The string-index path: the same permutation minima over
-    xxhash64 of each distinct shingle string."""
-    idx = D.shingle_index(planted)
-    hashes: dict[int, set[int]] = {}
-    for r in idx.select("doc_id", F.xxhash64("sh").alias("h64")).collect():
-        hashes.setdefault(r["doc_id"], set()).add(r["h64"])
-    want = {doc: _minhash_reference(hs) for doc, hs in hashes.items()}
-    assert {r["doc_id"]: _sig(r) for r in D.minhash_signatures(idx).collect()} == want
+def test_sig_payload_matches_python_reference(spark, seeded_stream):
+    """The fold's signature, hash set and size against a Python reference
+    over the collected stream. Guards the fold's int64 arithmetic, which
+    the exact-Jaccard pair oracles would only catch if a pair flipped."""
+    docs, hashes = seeded_stream
+    rows = _small_batches(spark, lambda: D._shingle_payload(docs, "doc_id", "text", 5))
+    assert len(rows) == len(hashes)
+    assert {r["doc_id"]: _sig(r) for r in rows} == {
+        doc: _minhash_reference(hs) for doc, hs in hashes.items()
+    }
+    assert _hash_sets(rows) == {doc: (len(hs), hs) for doc, hs in hashes.items()}
 
 
 def _oph_reference(hs: set[int]) -> list[int]:
@@ -402,17 +381,84 @@ def _oph_reference(hs: set[int]) -> list[int]:
     ]
 
 
-def test_oph_densify_matches_python_rotation(seeded_stream):
-    _, stream, hashes = seeded_stream
-    want = {doc: _oph_reference(hs) for doc, hs in hashes.items()}
+def test_oph_densify_matches_python_rotation(spark, seeded_stream):
+    """The OPH fold against a Python per-bin minimum plus rotation; short
+    documents leave bins empty for the rotation to fill."""
+    docs, hashes = seeded_stream
     assert any(len(hs) < D.NUM_PERM for hs in hashes.values())  # some bins borrow
-    payload = D._oph_payload(stream).collect()
-    assert {r["doc_id"]: _sig(r) for r in payload} == want
-    assert {r["doc_id"]: (r["sz"], set(r["hsh"])) for r in payload} == {
-        doc: (len(hs), hs) for doc, hs in hashes.items()
+    rows = _small_batches(spark, lambda: D._shingle_payload(docs, "doc_id", "text", 5, D._oph_mins))
+    assert {r["doc_id"]: _sig(r) for r in rows} == {
+        doc: _oph_reference(hs) for doc, hs in hashes.items()
     }
-    sigs = D._oph_signatures_hashed(stream).collect()
-    assert {r["doc_id"]: _sig(r) for r in sigs} == want
+    assert _hash_sets(rows) == {doc: (len(hs), hs) for doc, hs in hashes.items()}
+
+
+def test_dfpruned_payload_matches_python_reference(spark):
+    """d3c's payload against a Python DF cut: a shingle in more than
+    max_df_pct% of the documents adds no hash, a document keeps its row
+    when its first shingle is pruned, and a document whose every shingle
+    is pruned (like one too short to shingle) has no row."""
+    import random
+
+    rng = random.Random(5)
+    header = "boilerplate header "
+    texts = {i: header + " ".join(rng.choice(WORDS) for _ in range(rng.randint(3, 30))) for i in range(4)}
+    texts.update({i: " ".join(rng.choice(WORDS) for _ in range(rng.randint(2, 40))) for i in range(4, 9)})
+    texts[9] = header.strip()  # every shingle is in docs 0-3 too
+    texts[10] = "tiny"
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    pct = 30  # frequent: in more than 3 of the 11 documents
+
+    occ = D._hashed_shingle_stream(docs, "doc_id", "text", 5).join(
+        D._shingle_stream(docs, "doc_id", "text", 5), ["doc_id", "_p"]
+    )
+    shingles: dict[int, dict[str, int]] = {}
+    for r in occ.collect():
+        shingles.setdefault(r["doc_id"], {})[r["sh"]] = r["h64"]
+    df: dict[str, int] = {}
+    for sh in shingles.values():
+        for s in sh:
+            df[s] = df.get(s, 0) + 1
+    kept = {
+        doc: {h for s, h in sh.items() if df[s] * 100 <= pct * len(texts)}
+        for doc, sh in shingles.items()
+    }
+    assert df[header[:5]] * 100 > pct * len(texts)  # docs 0-3 lose their first shingle
+    assert not kept[9] and all(kept[i] for i in range(4))
+    want = {doc: hs for doc, hs in kept.items() if hs}
+
+    rows = _small_batches(spark, lambda: D._dfpruned_payload(docs, "doc_id", "text", 5, pct))
+    assert {r["doc_id"]: _sig(r) for r in rows} == {
+        doc: _minhash_reference(hs) for doc, hs in want.items()
+    }
+    assert _hash_sets(rows) == {doc: (len(hs), hs) for doc, hs in want.items()}
+
+
+FOLDS = {
+    "minhash": lambda docs: D._shingle_payload(docs, "doc_id", "text", 5),
+    "oph": lambda docs: D._shingle_payload(docs, "doc_id", "text", 5, D._oph_mins),
+    "dfpruned": lambda docs: D._dfpruned_payload(docs, "doc_id", "text", 5, 50),
+}
+
+
+@pytest.mark.parametrize(
+    "rows, message",
+    [
+        ([(1, "repeated document one"), (2, "another document"), (1, "repeated document two")],
+         "doc_id 1 names more than one document"),
+        ([(None, "a document without an id"), (2, "another document")], "null doc_id"),
+    ],
+)
+def test_fold_payload_rejects_repeated_and_null_doc_ids(spark, rows, message):
+    """The fold's precondition is unique, non-null doc_ids: where a
+    grouped payload would merge a repeated id's documents into one
+    signature, every fold (permutation minima, OPH, DF-pruned) fails the
+    job."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for name, fold in FOLDS.items():
+        with pytest.raises(Exception, match=message):
+            fold(docs).collect()
+            pytest.fail(f"the {name} fold accepted the documents")
 
 
 def test_wide_builders_stay_within_gateway_call_budget(spark, monkeypatch):
@@ -423,16 +469,13 @@ def test_wide_builders_stay_within_gateway_call_budget(spark, monkeypatch):
     import threading
 
     client = spark.sparkContext._gateway._gateway_client
-    one = spark.createDataFrame([(1, 7)], "doc_id long, h64 long")
     doc = spark.createDataFrame([(1, "one document")], "doc_id long, text string")
     cand = spark.createDataFrame([(1, 2)], "doc_id_a long, doc_id_b long")
-    payload = D._sig_payload(one)
+    payload = D._shingle_payload(doc, "doc_id", "text", 5)
     builders = {
-        "_sig_payload": lambda: D._sig_payload(one),
-        "_shingle_payload": lambda: D._shingle_payload(doc, "doc_id", "text", 5),
+        **{f"{name} fold": lambda fold=fold: fold(doc) for name, fold in FOLDS.items()},
         "_band_buckets": lambda: D._band_buckets(payload),
         "_est_filter": lambda: D._est_filter(cand, payload, 38),
-        "_oph_payload": lambda: D._oph_payload(one),
     }
     builder_thread = threading.get_ident()
     n = [0]

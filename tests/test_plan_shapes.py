@@ -213,7 +213,7 @@ def test_pq_seed_window_input_is_bounded(spark, sf_smoke):
 
 # The only sanctioned Python-side compute in registered queries: the
 # multimodal decode stages run Arrow-batched mapInPandas (codecs are
-# genuinely non-relational), and the MinHash payload runs one map-local
+# genuinely non-relational), and every LSH payload runs one map-local
 # MapInArrow fold over its shingle stream (dedup._fold_payload), which
 # any query may plan. Everything else must stay JVM-side.
 PANDAS_ALLOWED_PREFIXES = ("m1_", "m2_", "m3_", "m4_", "m4b_")
@@ -283,19 +283,25 @@ def test_lsh_verify_join_strategy_is_size_conditional(spark, monkeypatch):
     assert {(r["doc_id_a"], r["doc_id_b"]) for r in big.collect()} == small_pairs == {(0, 1)}
 
 
+def _plan_lines(frame) -> list[str]:
+    """The physical plan's lines; an executed frame's plan is read up to
+    AQE's initial-plan copy."""
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
 def _assert_fold_payload_plan(frame, where: str) -> None:
     """The payload's physical plan: a MapInArrow fold straight over the
     shingle Generate, with no aggregation anywhere and one Exchange, the
-    doc_id hash repartition of the raw documents below the Generate. An
-    executed frame's plan is read up to AQE's initial-plan copy."""
-    plan = frame._jdf.queryExecution().executedPlan().toString()
-    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    doc_id hash repartition of the raw documents below the Generate."""
+    lines = _plan_lines(frame)
     at = lambda node: [i for i, line in enumerate(lines) if node in line]  # noqa: E731
     assert not at("HashAggregate") and not at("SortAggregate"), (
         f"{where}: the payload plans an aggregation — the fold should "
         "replace explode -> groupBy(doc_id)"
     )
     [fold], [generate] = at("MapInArrow"), at("Generate")
+    assert PAYLOAD_FOLD.search(lines[fold]), f"{where}: {lines[fold]}"
     exchanges = at("Exchange")
     assert fold < generate, f"{where}: the fold does not sit above the Generate"
     assert len(exchanges) == 1 and "hashpartitioning(doc_id" in lines[exchanges[0]], (
@@ -307,12 +313,32 @@ def _assert_fold_payload_plan(frame, where: str) -> None:
     )
 
 
+def _assert_fold_over_its_generate(frame, where: str) -> None:
+    """d3c's payload: its plan also counts document frequencies (an
+    aggregate below the broadcast of the frequent shingles), but between
+    the fold and the shingle Generate it feeds there is no Exchange and
+    no aggregate, only the broadcast join's streamed side."""
+    lines = _plan_lines(frame)
+    [fold] = [i for i, line in enumerate(lines) if "MapInArrow" in line]
+    assert PAYLOAD_FOLD.search(lines[fold]), f"{where}: {lines[fold]}"
+    generate = next(i for i in range(fold, len(lines)) if "Generate" in lines[i])
+    between = lines[fold + 1:generate]
+    assert any("BroadcastHashJoin" in line and "LeftOuter" in line for line in between), (
+        f"{where}: the pruning is not a broadcast left outer join:\n" + "\n".join(between)
+    )
+    assert not [line for line in between if "Exchange" in line or "Aggregate" in line], (
+        f"{where}: an Exchange or aggregate sits between the Generate and the payload:\n"
+        + "\n".join(between)
+    )
+
+
 def test_payload_fold_has_no_shuffle_or_aggregate(spark, sf_smoke, tmp_path, monkeypatch):
-    """The MinHash payload of d3 and of a streaming-dedup micro-batch is one
-    map-side stage after the doc_id repartition: no Exchange and no
-    (Object)HashAggregate between the Generate and the payload. A
-    micro-batch never calls ``scale.fan_out_narrow`` and never converts
-    the batch to an RDD."""
+    """The payload of d3, d3d (OPH) and a streaming-dedup micro-batch is
+    one map-side stage after the doc_id repartition: no Exchange and no
+    (Object)HashAggregate between the Generate and the payload; d3c's
+    pruned stream adds only a broadcast join there. A micro-batch never
+    calls ``scale.fan_out_narrow`` and never converts the batch to an
+    RDD. Every fold is one the registry guard admits."""
     import os
 
     from pyspark.sql import DataFrame
@@ -324,6 +350,9 @@ def test_payload_fold_has_no_shuffle_or_aggregate(spark, sf_smoke, tmp_path, mon
 
     docs = load(spark, sf_smoke, "documents")
     _assert_fold_payload_plan(D._shingle_payload(docs, "doc_id", "text", 5), "d3 payload")
+    oph = D._shingle_payload(docs, "doc_id", "text", 5, D._oph_mins)
+    _assert_fold_payload_plan(oph, "d3d payload")
+    _assert_fold_over_its_generate(D._dfpruned_payload(docs, "doc_id", "text", 5, 10), "d3c payload")
 
     text = "the quick brown fox jumps over the lazy dog again and again"
     batch = spark.createDataFrame(
