@@ -418,15 +418,38 @@ def _payload_fold(schema: StructType, signature: Callable, batches):
             )
 
 
-def _cand_pairs(buckets: DataFrame, min_bands: int) -> DataFrame:
-    """Band-bucket self-join -> per-pair band-match count -> k >= min_bands
-    cut (the funnel's first exactness-preserving prefilter, factored)."""
+def _cand_pairs(
+    buckets: DataFrame, min_bands: int, corpus: DataFrame | None = None
+) -> DataFrame:
+    """Band-bucket join -> per-pair band-match count -> k >= min_bands cut
+    (the funnel's first exactness-preserving prefilter), pairs canonical
+    doc_id_a < doc_id_b.
+
+    ``buckets`` alone: its self-join pairs (the batch funnel). With
+    ``corpus`` (the band buckets of an already-indexed corpus) the
+    incremental candidates, new x corpus ∪ new x new: each pair still
+    surfaces once per matching band, so the cut keeps the batch funnel's
+    exactness. A doc_id present on both sides (a replayed batch probing
+    an index that already holds it) meets itself there; that is not a
+    pair."""
     left = buckets.select(F.col("doc_id").alias("doc_id_a"), "band_id", "band_hash")
     right = buckets.select(F.col("doc_id").alias("doc_id_b"), "band_id", "band_hash")
+    pairs = left.join(right, ["band_id", "band_hash"]).filter(
+        F.col("doc_id_a") < F.col("doc_id_b")
+    )
+    if corpus is not None:
+        cb = corpus.select(F.col("doc_id").alias("cid"), "band_id", "band_hash")
+        nc = (
+            left.join(cb, ["band_id", "band_hash"])
+            .filter(F.col("doc_id_a") != F.col("cid"))
+            .select(
+                F.least("doc_id_a", "cid").alias("doc_id_a"),
+                F.greatest("doc_id_a", "cid").alias("doc_id_b"),
+            )
+        )
+        pairs = nc.union(pairs.select("doc_id_a", "doc_id_b"))
     return (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .groupBy("doc_id_a", "doc_id_b")
+        pairs.groupBy("doc_id_a", "doc_id_b")
         .agg(F.count("*").alias("k"))
         .filter(F.col("k") >= min_bands)
         .drop("k")
@@ -716,47 +739,26 @@ def minhash_lsh_incremental(
 ) -> DataFrame:
     """Near-dup pairs *touching a new batch*, against an already-indexed
     corpus — the incremental form a 100 TB pipeline actually runs: the
-    corpus's signatures, band buckets, and hashed shingle arrays are
-    maintained as bucketed tables across batches (here built inline from
-    ``corpus``; at scale they are parquet reads), so per-batch work is
+    corpus's payload and band buckets are maintained as bucketed tables
+    across batches (here built inline from ``corpus``; at scale they are
+    the parquet reads of streaming/dedup_stream), so per-batch work is
     O(|new|) signature computation + bucket probes of the index, never a
     re-scan of the corpus text.
 
-    Candidates = (new x corpus buckets) ∪ (new x new buckets); each pair
-    surfaces exactly once per matching band (corpus buckets hold no new
-    docs, and new-new pairs are ordered), so the band-count >= min_bands
-    cut has identical exactness to the batch funnel. Output pairs are
-    canonicalized doc_id_a < doc_id_b and equal the batch pair set
-    restricted to pairs with at least one new doc.
+    Candidates = (new x corpus buckets) ∪ (new x new buckets)
+    (:func:`_cand_pairs`, shared with the streaming probe), so the
+    band-count >= min_bands cut has identical exactness to the batch
+    funnel. Output pairs are canonicalized doc_id_a < doc_id_b and equal
+    the batch pair set restricted to pairs with at least one new doc.
     """
     from pyspark.storagelevel import StorageLevel
 
     rows, min_bands, est_cutoff = _lsh_params(threshold)
     corpus_pl = _shingle_payload(corpus, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
     new_pl = _shingle_payload(new, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    corpus_buckets = _band_buckets(corpus_pl, rows)
-    new_buckets = _band_buckets(new_pl, rows)
-
-    nb = new_buckets.select(F.col("doc_id").alias("nid"), "band_id", "band_hash")
-    cb = corpus_buckets.select(F.col("doc_id").alias("cid"), "band_id", "band_hash")
-    new_corpus = nb.join(cb, ["band_id", "band_hash"]).select(
-        F.least("nid", "cid").alias("doc_id_a"), F.greatest("nid", "cid").alias("doc_id_b")
+    cand = _cand_pairs(
+        _band_buckets(new_pl, rows), min_bands, _band_buckets(corpus_pl, rows)
     )
-    nb2 = new_buckets.select(F.col("doc_id").alias("doc_id_b"), "band_id", "band_hash")
-    new_new = (
-        new_buckets.select(F.col("doc_id").alias("doc_id_a"), "band_id", "band_hash")
-        .join(nb2, ["band_id", "band_hash"])
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-    )
-    cand = (
-        new_corpus.union(new_new)
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count("*").alias("k"))
-        .filter(F.col("k") >= min_bands)
-        .drop("k")
-    )
-
     payload = corpus_pl.unionByName(new_pl)
     n_docs = corpus_pl.count() + new_pl.count()  # materializes both payloads
     return _verify_jaccard(

@@ -33,8 +33,10 @@ concurrently with the probe's consumers.
 
 Layout errors. A kbucketed index with batch dirs but no ``_meta.json``,
 with an unparseable ``_meta.json``, or whose kbucketed table holds
-parquet files directly in a batch dir has no known modulus. This module
-never writes such a state; :func:`layout` raises
+parquet files directly in a batch dir has no known modulus, and one with
+batch dirs but no directory for a declared kbucketed table was written
+with another table set. This module never writes such a state;
+:func:`layout` raises
 :class:`IndexLayoutError` ("rebuild the index") before anything is read
 or written. So does a ``_meta.json`` whose bytes fail their Hadoop
 checksum.
@@ -118,10 +120,15 @@ def layout(
             fsio.mkdirs(index_path)
             fsio.write_text(meta, json.dumps({"n_doc_buckets": n}))
     for name, key in tables.items():
+        table = os.path.join(index_path, name)
         if key and batches[name]:
-            first = os.path.join(index_path, name, f"batch={batches[name][0]}")
+            first = os.path.join(table, f"batch={batches[name][0]}")
             if any(f.endswith(".parquet") for f in fsio.listdir(first)):
                 raise _rebuild(index_path, f"table {name!r} has no {KB}= level")
+        # kbucketed tables are written first and compaction keeps their
+        # directory, so only an index of another table set gets here
+        elif key and any(batches.values()) and not fsio.is_dir(table):
+            raise _rebuild(index_path, f"batch dirs but no table {name!r}")
     return Layout(n, batches)
 
 

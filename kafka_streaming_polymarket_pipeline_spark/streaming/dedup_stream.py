@@ -3,8 +3,8 @@ pipeline actually runs continuously.
 
 The batch operator (operators/dedup.minhash_lsh_incremental) proves the
 O(|new|) math; this module makes it a standing job with a PERSISTENT
-index: the corpus's band buckets and hashed shingle arrays live as
-parquet tables that each micro-batch probes and then extends. Per batch
+index: the corpus's band buckets and MinHash payload live as parquet
+tables that each micro-batch probes and then extends. Per batch
 the work is:
 
   1. signature + band computation for the new docs only: the batch is
@@ -13,31 +13,35 @@ the work is:
      ``_shingle_payload``; no shuffle or aggregation after the
      Generate);
   2. bucket probes: new-batch bands equi-join the stored bucket table
-     (plus new-new pairs) -> band-count cut -> signature-agreement
-     estimate cut -> exact hashed-shingle verify — the same
+     (plus new-new pairs; operators/dedup ``_cand_pairs``, the one
+     candidate builder d7 uses too) -> band-count cut -> signature-
+     agreement estimate cut -> exact hashed-shingle verify — the same
      exactness-preserving funnel as d3. The estimate stage is LOAD-
      BEARING on templated corpora (measured: dropping it pushed one
      1000-doc batch's probe from 7 s to 107 s — the J in [0.15, 0.5)
-     candidate mass hits the array-intersect verify unpruned), so the
-     signatures table stays in the index, kbucketed like the arrays.
+     candidate mass hits the array-intersect verify unpruned), so it
+     stays, reading only the payload's m* columns.
   3. index extension: the new docs' rows land under
      ``batch=<epoch_id>`` partition directories written with per-batch
      overwrite, so a foreachBatch retry after a crash REWRITES the same
      directory instead of appending duplicates (idempotent — this is
      what makes the exactly-once claim hold on the index path).
 
-The index is three ``streaming/batchdir`` tables, declared in
-:data:`TABLES`: the per-doc payload tables ``sigs`` and ``hashed`` are
-kbucketed by doc_id, so the estimate and verify stages partition-prune
-their reads to the buckets holding candidate docs (O(candidate buckets),
-not O(corpus)) while each batch still writes only its own files (the
-index is append-only: new doc_ids are new keys). The band-bucket table
+The index is two ``streaming/batchdir`` tables, declared in
+:data:`TABLES`. ``payload`` holds the fold's rows ``(doc_id, hsh,
+m0..m127, sz)`` as the batch funnel builds them, kbucketed by doc_id, so
+the estimate and verify stages read one frame, partition-pruned to the
+buckets holding candidate docs (O(candidate buckets), not O(corpus)),
+while each batch still writes only its own files (the index is
+append-only: new doc_ids are new keys). The band-bucket table
 ``buckets`` stays flat: its probe is an equi-join on band_hash, which a
 1000-doc batch (64k bands) touches uniformly, so a full scan of
 three-long rows is the honest per-batch floor there (SCALE.md's
 amortization table). A replayed micro-batch probes with
 ``before_batch=<batch_id>``, so it never reads its first attempt's rows
-(batchdir's replay guard).
+(batchdir's replay guard). An index written in the older three-table
+layout (``sigs``/``hashed``) has no ``payload`` table and fails with
+batchdir's "rebuild the index" error.
 """
 
 from __future__ import annotations
@@ -48,19 +52,15 @@ from pyspark.sql import functions as F
 from kafka_streaming_polymarket_pipeline_spark.operators import dedup as D
 from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 
-SIGS, BUCKETS, HASHED = "sigs", "buckets", "hashed"
-TABLES = {SIGS: "doc_id", HASHED: "doc_id", BUCKETS: None}
+PAYLOAD, BUCKETS = "payload", "buckets"
+TABLES = {PAYLOAD: "doc_id", BUCKETS: None}
 
 
 def _index_parts(payload: DataFrame, threshold: float) -> tuple:
-    """Split a (doc_id, hsh, m0..m127, sz) payload into the index's
-    (sigs, buckets, hashed) frames."""
+    """A (doc_id, hsh, m0..m127, sz) payload and its band buckets: the
+    index's (payload, buckets) frames."""
     rows, _, _ = D._lsh_params(threshold)
-    return (
-        payload.drop("hsh", "sz"),
-        D._band_buckets(payload, rows),
-        payload.select("doc_id", "hsh", "sz"),
-    )
+    return payload, D._band_buckets(payload, rows)
 
 
 def write_index_batch(
@@ -68,11 +68,11 @@ def write_index_batch(
     n: int = 5, parts: tuple | None = None
 ) -> None:
     """Materialize one batch's index rows under batch=<id> dirs
-    (overwrite -> retry-idempotent), sigs and hashed kbucketed by doc_id.
-    ``parts`` lets the caller pass the (sigs, buckets, hashed) frames it
+    (overwrite -> retry-idempotent), the payload kbucketed by doc_id.
+    ``parts`` lets the caller pass the (payload, buckets) frames it
     already computed for probing, so the signature stage — the expensive
     map pass — runs once per batch, not twice."""
-    sigs, buckets, hashed = parts or _index_parts(
+    payload, buckets = parts or _index_parts(
         D._shingle_payload(docs, "doc_id", "text", n), threshold
     )
     # The payload keeps one partition per core (the fold's doc_id
@@ -81,17 +81,16 @@ def write_index_batch(
     # which opens every bucket file, does not pay one open per core.
     batchdir.write_tables(
         index_path, TABLES, batch_id,
-        {SIGS: sigs, HASHED: hashed, BUCKETS: buckets.hint("rebalance")},
+        {PAYLOAD: payload, BUCKETS: buckets.hint("rebalance")},
     )
 
 
 def checkpointed_parts(new: DataFrame, threshold: float = 0.5, n: int = 5) -> tuple:
-    """The batch's (sigs, buckets, hashed) frames, eagerly materialized —
-    computed once, shared by the probe and the index write. ONE payload
-    (dedup._shingle_payload) is checkpointed and the three frames are
-    projections of it, so the shingle pass — the expensive per-batch map
-    stage — runs exactly once per batch; buckets is a cheap row-local
-    hash over the checkpointed rows.
+    """The batch's (payload, buckets) frames, eagerly materialized —
+    computed once, shared by the probe and the index write. The payload
+    (dedup._shingle_payload) is checkpointed, so the shingle pass — the
+    expensive per-batch map stage — runs exactly once per batch; buckets
+    is a cheap row-local hash over the checkpointed rows.
 
     A micro-batch arrives in maxFilesPerTrigger-many input splits. The
     payload hash-partitions the batch on doc_id at the session's default
@@ -114,71 +113,36 @@ def incremental_pairs_against_index(
     reads only the batches before it (batchdir's replay guard)."""
     spark = new.sparkSession
     lay = batchdir.layout(index_path, TABLES)
-    rows, min_bands, est_cutoff = D._lsh_params(threshold)
-    new_sigs, new_buckets, new_hashed = parts or checkpointed_parts(new, threshold, n)
+    _, min_bands, est_cutoff = D._lsh_params(threshold)
+    payload, new_buckets = parts or checkpointed_parts(new, threshold, n)
 
     corpus_buckets = batchdir.read(spark, index_path, lay, BUCKETS, before_batch)
-
-    nb = new_buckets.select(F.col("doc_id").alias("nid"), "band_id", "band_hash")
-    nn = (
-        nb.join(
-            new_buckets.select(F.col("doc_id").alias("doc_id_b"), "band_id", "band_hash"),
-            ["band_id", "band_hash"],
-        )
-        .filter(F.col("nid") < F.col("doc_id_b"))
-        .select(F.col("nid").alias("doc_id_a"), "doc_id_b")
-    )
+    cand = D._cand_pairs(new_buckets, min_bands, corpus_buckets)
     if corpus_buckets is not None:
-        cb = corpus_buckets.select(F.col("doc_id").alias("cid"), "band_id", "band_hash")
-        nc = (
-            nb.join(cb, ["band_id", "band_hash"])
-            # A doc_id that repeats across batches (or a probe without
-            # before_batch of a batch the index already holds) meets
-            # itself here with jaccard 1; it is not a pair.
-            .filter(F.col("nid") != F.col("cid"))
-            .select(
-                F.least("nid", "cid").alias("doc_id_a"),
-                F.greatest("nid", "cid").alias("doc_id_b"),
+        # The est/verify stages only need payload rows for CANDIDATE
+        # docs. Materialize the (small) candidate set once, derive its
+        # touched doc-id buckets — a bounded <= n-bucket driver-side int
+        # list, with the index's PINNED count — and partition-prune the
+        # corpus payload read to those dirs. The batch's own rows come
+        # from the in-memory checkpointed parts.
+        cand = cand.localCheckpoint(eager=True)
+        touched = sorted(
+            r["kb"]
+            for r in cand.select(
+                F.explode(
+                    F.array(batchdir.bucket("doc_id_a", lay.n), batchdir.bucket("doc_id_b", lay.n))
+                ).alias("kb")
             )
+            .distinct()
+            .collect()
         )
-        cand_src = nc.union(nn)
-    else:
-        cand_src = nn
-
-    cand = (
-        cand_src.groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count("*").alias("k"))
-        .filter(F.col("k") >= min_bands)
-        .drop("k")
-    )
-    if corpus_buckets is None:
-        return D._verify_jaccard(
-            D._est_filter(cand, new_sigs, est_cutoff), new_hashed, threshold
-        )
-
-    # The est/verify stages only need sig/hashed rows for CANDIDATE docs.
-    # Materialize the (small) candidate set once, derive its touched
-    # doc-id buckets — a bounded <= n-bucket driver-side int list, with
-    # the index's PINNED count — and partition-prune the corpus payload
-    # read to those dirs. The batch's own rows come from the in-memory
-    # checkpointed parts.
-    cand = cand.localCheckpoint(eager=True)
-    touched = sorted(
-        r["kb"]
-        for r in cand.select(
-            F.explode(
-                F.array(batchdir.bucket("doc_id_a", lay.n), batchdir.bucket("doc_id_b", lay.n))
-            ).alias("kb")
-        )
-        .distinct()
-        .collect()
-    )
-    corpus_sigs = batchdir.read(spark, index_path, lay, SIGS, before_batch, buckets=touched)
-    corpus_hashed = batchdir.read(spark, index_path, lay, HASHED, before_batch, buckets=touched)
-    # None when every earlier batch was empty (no kbucketed file to read)
-    sigs = new_sigs if corpus_sigs is None else corpus_sigs.union(new_sigs)
-    hashed = new_hashed if corpus_hashed is None else corpus_hashed.union(new_hashed)
-    return D._verify_jaccard(D._est_filter(cand, sigs, est_cutoff), hashed, threshold)
+        corpus = batchdir.read(spark, index_path, lay, PAYLOAD, before_batch, buckets=touched)
+        # None when every earlier batch was empty (no kbucketed file to read)
+        if corpus is not None:
+            payload = corpus.unionByName(payload)
+    # one frame for both stages, as in the batch funnel: column pruning
+    # keeps the estimate's scan on doc_id and m0..m127
+    return D._verify_jaccard(D._est_filter(cand, payload, est_cutoff), payload, threshold)
 
 
 def _sink_batch(
@@ -243,6 +207,6 @@ def compact_index(spark: SparkSession, index_path: str) -> dict:
 
 def needs_compaction(index_path: str, max_files: int = 32) -> dict:
     """When to run :func:`compact_index` (:func:`batchdir.needs_compaction`):
-    the most files one candidate bucket of sigs/hashed or the whole
-    buckets table makes a probe open."""
+    the most files one candidate bucket of payload or the whole buckets
+    table makes a probe open."""
     return batchdir.needs_compaction(index_path, TABLES, max_files)

@@ -240,11 +240,8 @@ def corpus_ingest_sink(
             landed = landed.join(lm_scores, "doc_id")
         batchdir.write(landed, os.path.join(out_path, "admitted"), batch_id)
         # dedup only over admitted docs: rejects never cost signatures
-        parts = DS.checkpointed_parts(admitted, threshold, n)
-        pairs = DS.incremental_pairs_against_index(
-            admitted, index_path, threshold, n, parts=parts, before_batch=batch_id
+        DS._sink_batch(
+            admitted, batch_id, index_path, os.path.join(out_path, "pairs"), threshold, n
         )
-        batchdir.write(pairs, os.path.join(out_path, "pairs"), batch_id)
-        DS.write_index_batch(admitted, index_path, batch_id, threshold, n, parts=parts)
 
     return foreach_batch_sink(docs_stream, process, checkpoint)

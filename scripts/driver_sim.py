@@ -9,8 +9,8 @@ description. Run from a DIFFERENT cwd than the repo if a stray
 metastore matters; always a FRESH process (the driver's session config
 is unknown, so no session.get_spark tuning here).
 """
-import sys, json, hashlib
-sys.path.insert(0, "/root/repo")
+import hashlib, json, os, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -25,7 +25,7 @@ qs = e.queries()
 oracles = e.oracle_sql()
 
 con = duckdb.connect()
-import glob, os
+import glob
 for p in glob.glob(os.path.join(SF_DIR, "*")):
     t = os.path.basename(p).split(".")[0]
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{p}/*.parquet' )" if os.path.isdir(p)

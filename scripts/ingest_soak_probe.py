@@ -116,10 +116,10 @@ def ingest_probe() -> None:
             index_path = os.path.join(d, "idx")
         q.awaitTermination()
         wall = time.perf_counter() - t0
-        hashed_root = os.path.join(index_path, "hashed")
+        payload_root = os.path.join(index_path, dedup_stream.PAYLOAD)
         index_docs = (
-            spark.read.option("basePath", hashed_root)
-            .parquet(os.path.join(hashed_root, "batch=*"))
+            spark.read.option("basePath", payload_root)
+            .parquet(os.path.join(payload_root, "batch=*"))
             .select("doc_id").distinct().count()
         )
         quar = 0
@@ -210,12 +210,12 @@ def soak_probe() -> None:
             # files a single-bucket probe must open = batch dirs holding
             # that bucket id (one parquet file per bucket per batch by
             # construction) — THE file-count growth driver
-            hashed = os.path.join(index_path, "hashed")
+            payload = os.path.join(index_path, ds.PAYLOAD)
             n_files = sum(
-                1 for _, _, fs in os.walk(hashed) for f in fs if f.endswith(".parquet")
+                1 for _, _, fs in os.walk(payload) for f in fs if f.endswith(".parquet")
             )
             per_bucket: dict[str, int] = {}
-            for r, dirs, _ in os.walk(hashed):
+            for r, dirs, _ in os.walk(payload):
                 for x in dirs:
                     if x.startswith("__kbucket="):
                         per_bucket[x] = per_bucket.get(x, 0) + 1
@@ -228,7 +228,7 @@ def soak_probe() -> None:
                 "extend_sec": round(t_ext, 2),
                 "batch_pairs": n_pairs,
                 "index_mb": round(idx_bytes / 1e6, 1),
-                "hashed_files": n_files,
+                "payload_files": n_files,
                 "files_per_bucket": round(
                     sum(per_bucket.values()) / n_bucket_dirs, 1
                 ),

@@ -234,12 +234,12 @@ def pruning_probe() -> None:
     t_pruned, pairs_pruned = run(pruned=True)
     assert pairs_full == pairs_pruned, "pruning changed the pair set"
 
-    # payload rows each mode reads (sigs, the 129-column table)
+    # payload rows each mode reads (the payload table)
     lay = batchdir.layout(index_path, ds.TABLES)
-    full_rows = batchdir.read(spark, index_path, lay, ds.SIGS).count()
+    full_rows = batchdir.read(spark, index_path, lay, ds.PAYLOAD).count()
     touched = sorted(set(seen_touched[0])) if seen_touched else []
     pruned_rows = (
-        batchdir.read(spark, index_path, lay, ds.SIGS, buckets=touched).count()
+        batchdir.read(spark, index_path, lay, ds.PAYLOAD, buckets=touched).count()
         if touched
         else 0
     )
@@ -251,8 +251,8 @@ def pruning_probe() -> None:
         "probe_sec_unpruned": round(t_full, 2),
         "probe_sec_pruned": round(t_pruned, 2),
         "touched_buckets": len(touched),
-        "sigs_rows_full_read": full_rows,
-        "sigs_rows_pruned_read": pruned_rows,
+        "payload_rows_full_read": full_rows,
+        "payload_rows_pruned_read": pruned_rows,
         "pairs": len(pairs_pruned),
     }))
     shutil.rmtree(base_dir, ignore_errors=True)

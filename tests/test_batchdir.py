@@ -1,5 +1,5 @@
 """The batch-dir index layer (streaming/batchdir.py) shared by the
-standing dedup, containment and boilerplate sinks.
+standing dedup, containment, boilerplate and ingest sinks.
 
 - An index in a layout the code never writes fails loudly, on the write
   and the probe path alike, before any file lands.
@@ -19,10 +19,12 @@ import time
 
 import pytest
 
+from kafka_streaming_polymarket_pipeline_spark.operators import dedup as D
 from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
 from kafka_streaming_polymarket_pipeline_spark.streaming import boilerplate_stream as BS
 from kafka_streaming_polymarket_pipeline_spark.streaming import containment_stream as CS
 from kafka_streaming_polymarket_pipeline_spark.streaming import dedup_stream as DS
+from kafka_streaming_polymarket_pipeline_spark.streaming import ingest_stream as IS
 
 SCHEMA = "doc_id long, text string"
 BASE = (
@@ -46,16 +48,34 @@ def _files(root) -> list[str]:
 
 
 @pytest.mark.parametrize(
-    "state", ["no_meta", "truncated_meta", "truncated_meta_with_crc", "flat_kbucketed_table"]
+    "state",
+    [
+        "no_meta", "truncated_meta", "truncated_meta_with_crc", "flat_kbucketed_table",
+        "three_table_layout",
+    ],
 )
 def test_unknown_layout_fails_loudly_before_any_write(spark, tmp_path, state):
     """Batch dirs without _meta.json, an unparseable _meta.json (with or
     without its Hadoop checksum sidecar, which then rejects the bytes),
     and a kbucketed table whose batch dir holds parquet files directly
-    all leave the bucket count unknown. Writing and probing both raise
-    the "rebuild the index" error, and no file lands."""
+    all leave the bucket count unknown; an index of the older
+    sigs/hashed/buckets layout has no payload table, so its probe would
+    drop every candidate against it. Writing and probing both raise the
+    "rebuild the index" error, and no file lands."""
     idx = str(tmp_path / "idx")
-    DS.write_index_batch(spark.createDataFrame(BATCH_A, SCHEMA), idx, 0)
+    docs = spark.createDataFrame(BATCH_A, SCHEMA)
+    if state == "three_table_layout":
+        payload, buckets = DS._index_parts(D._shingle_payload(docs, "doc_id", "text", 5), 0.5)
+        batchdir.write_tables(
+            idx, {"sigs": "doc_id", "hashed": "doc_id", DS.BUCKETS: None}, 0,
+            {
+                "sigs": payload.drop("hsh", "sz"),
+                "hashed": payload.select("doc_id", "hsh", "sz"),
+                DS.BUCKETS: buckets,
+            },
+        )
+    else:
+        DS.write_index_batch(docs, idx, 0)
     meta = os.path.join(idx, batchdir.META)
     if state == "no_meta":
         os.remove(meta)
@@ -65,8 +85,8 @@ def test_unknown_layout_fails_loudly_before_any_write(spark, tmp_path, state):
         if state == "truncated_meta":
             # without the sidecar the content itself fails to parse
             os.remove(os.path.join(idx, f".{batchdir.META}.crc"))
-    else:  # move sigs' batch-0 files up out of their __kbucket= dirs
-        b0 = os.path.join(idx, DS.SIGS, "batch=0")
+    elif state == "flat_kbucketed_table":  # move payload's batch-0 files up
+        b0 = os.path.join(idx, DS.PAYLOAD, "batch=0")
         for kb in [d for d in os.listdir(b0) if d.startswith(batchdir.KB)]:
             for f in os.listdir(os.path.join(b0, kb)):
                 os.rename(os.path.join(b0, kb, f), os.path.join(b0, f))
@@ -87,8 +107,8 @@ def test_empty_first_batch_reads_as_no_batch(spark, tmp_path):
     idx = str(tmp_path / "idx")
     DS.write_index_batch(spark.createDataFrame([], SCHEMA), idx, 0)
     lay = batchdir.layout(idx, DS.TABLES)
-    assert lay.batches[DS.SIGS] == [0]
-    assert batchdir.read(spark, idx, lay, DS.SIGS, before_batch=1) is None
+    assert lay.batches[DS.PAYLOAD] == [0]
+    assert batchdir.read(spark, idx, lay, DS.PAYLOAD, before_batch=1) is None
     batch = spark.createDataFrame(BATCH_A[:2], SCHEMA)
     pairs = DS.incremental_pairs_against_index(batch, idx, before_batch=1).collect()
     assert [(r["doc_id_a"], r["doc_id_b"], r["jaccard"]) for r in pairs] == [(0, 1, 1.0)]
@@ -112,6 +132,14 @@ SINKS = {
         ),
         ("docs",),
         BS.TABLES,
+    ),
+    # doc 4 ("to be or not to be") fails the quality gate: quarantined
+    "ingest": (
+        lambda s, r: IS.corpus_ingest_sink(
+            s.selectExpr("doc_id", "'en' AS lang", "'s0' AS source", "text"), r, f"{r}/ck"
+        ),
+        ("quarantine", "admitted", "pairs"),
+        DS.TABLES,
     ),
 }
 CRASHES = [

@@ -71,7 +71,7 @@ def test_dedup_index_on_file_uri(spark, tmp_path):
     dec = DS.needs_compaction(uri_idx, max_files=1)
     assert dec["worst"] >= 2  # two batches landed
     stats = DS.compact_index(spark, uri_idx)
-    assert set(stats) == {"sigs", "hashed", "buckets"}
+    assert set(stats) == {"payload", "buckets"}
     assert all(v["files_after"] >= 1 for v in stats.values())
     # post-compaction probe still sees the whole corpus: doc 5 dups 0/1/3
     b2 = spark.createDataFrame(

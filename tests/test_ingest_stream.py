@@ -102,10 +102,10 @@ def test_ingest_stream_equals_batch_and_rejects_never_indexed(spark, tmp_path):
     assert all(p[0] not in (2, 4) and p[1] not in (2, 4) for p in got_pairs)
 
     # index payload holds exactly the admitted docs
-    hashed = spark.read.option("basePath", f"{out}/index/hashed").parquet(
-        f"{out}/index/hashed/batch=*"
+    payload = spark.read.option("basePath", f"{out}/index/payload").parquet(
+        f"{out}/index/payload/batch=*"
     )
-    assert {r["doc_id"] for r in hashed.select("doc_id").collect()} == kept_ids
+    assert {r["doc_id"] for r in payload.select("doc_id").collect()} == kept_ids
 
     # cross-batch admitted near-dup pairs via the INDEX (0/1 arrived in
     # batch 0; 3 pairs against both in batch 1)

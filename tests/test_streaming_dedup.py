@@ -67,14 +67,13 @@ def test_streaming_incremental_dedup_equals_batch(spark, tmp_path):
     # no pair emitted twice across batches
     assert got_df.count() == len(expected)
 
-    # index covers every doc after the run (hashed arrays are checked
-    # as the representative per-doc payload table; the sigs table is
-    # ALSO stored — kbucketed, read back by the estimate stage — see
-    # the module docstring for the index layout)
-    hashed = spark.read.option("basePath", f"{index_path}/hashed").parquet(
-        f"{index_path}/hashed/batch=*"
+    # index covers every doc after the run (the kbucketed payload table,
+    # read back by the estimate and verify stages — see the module
+    # docstring for the index layout)
+    payload = spark.read.option("basePath", f"{index_path}/payload").parquet(
+        f"{index_path}/payload/batch=*"
     )
-    assert hashed.select("doc_id").distinct().count() == 6
+    assert payload.select("doc_id").distinct().count() == 6
 
     # late-arriving near-dups paired against the INDEX, not re-read text:
     # batch1's emissions include cross-batch pairs (0,3) and (0,5)
@@ -87,14 +86,14 @@ def test_write_index_batch_is_retry_idempotent(spark, tmp_path):
     docs = spark.createDataFrame(BATCH_A, "doc_id long, text string")
     p = str(tmp_path / "idx")
     DS.write_index_batch(docs, p, batch_id=7)
-    n1 = spark.read.parquet(f"{p}/hashed/batch=7").count()
+    n1 = spark.read.parquet(f"{p}/payload/batch=7").count()
     DS.write_index_batch(docs, p, batch_id=7)  # simulated retry
-    n2 = spark.read.parquet(f"{p}/hashed/batch=7").count()
+    n2 = spark.read.parquet(f"{p}/payload/batch=7").count()
     assert n1 == n2 == 3  # overwrite, not append
 
 
 def test_index_payload_reads_partition_prune(spark, tmp_path):
-    """The kbucketed sigs/hashed layout must produce a real
+    """The kbucketed payload layout must produce a real
     PartitionFilters entry (directory-level pruning) and return exactly
     the touched buckets' rows. A small batch writes one file per doc
     bucket and one band-bucket file, however many cores built it."""
@@ -104,9 +103,9 @@ def test_index_payload_reads_partition_prune(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     DS.write_index_batch(docs, idx, 0)
-    assert DS.needs_compaction(idx)["tables"] == {DS.SIGS: 1, DS.HASHED: 1, DS.BUCKETS: 1}
+    assert DS.needs_compaction(idx)["tables"] == {DS.PAYLOAD: 1, DS.BUCKETS: 1}
     lay = batchdir.layout(idx, DS.TABLES)
-    pruned = batchdir.read(spark, idx, lay, DS.SIGS, buckets=[3, 7])
+    pruned = batchdir.read(spark, idx, lay, DS.PAYLOAD, buckets=[3, 7])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__kbucket" in plan
     want = {
@@ -142,7 +141,7 @@ def test_bucket_count_pinned_in_meta_survives_constant_change(spark, tmp_path, m
     DS.write_index_batch(b, idx, 1)
     kbs = {
         int(d.split("=")[1])
-        for d in os.listdir(os.path.join(idx, DS.HASHED, "batch=1"))
+        for d in os.listdir(os.path.join(idx, DS.PAYLOAD, "batch=1"))
         if d.startswith(batchdir.KB)
     }
     assert kbs and max(kbs) < 8  # new batch written with the pinned modulus
@@ -283,10 +282,10 @@ def test_compact_index_preserves_probes_and_shrinks_files(spark, tmp_path, monke
         )
 
     before = pairs()
-    files_before = {t: n_parquet(t) for t in (DS.SIGS, DS.HASHED, DS.BUCKETS)}
+    files_before = {t: n_parquet(t) for t in (DS.PAYLOAD, DS.BUCKETS)}
     stats = DS.compact_index(spark, idx)
     assert pairs() == before and before  # identical probe results
-    for t in (DS.SIGS, DS.HASHED, DS.BUCKETS):
+    for t in (DS.PAYLOAD, DS.BUCKETS):
         assert n_parquet(t) < files_before[t]  # 3 batches -> 1
         assert len(
             [d for d in os.listdir(os.path.join(idx, t)) if d.startswith("batch=")]
@@ -330,7 +329,7 @@ def test_compact_index_recovers_from_crash_states(spark, tmp_path):
     }
 
     # crash in step 1: staging exists, no _SUCCESS, originals intact
-    tmp = os.path.join(idx, DS.SIGS, ".compact_tmp")
+    tmp = os.path.join(idx, DS.PAYLOAD, ".compact_tmp")
     os.makedirs(tmp)
     with open(os.path.join(tmp, "part-junk.parquet"), "w") as f:
         f.write("not parquet")
@@ -385,7 +384,7 @@ def test_compact_index_recovers_partial_deletion_without_data_loss(spark, tmp_pa
     # produce a COMPLETE staging dir (run a real compaction, then turn
     # its result back into the mid-crash state)
     DS.compact_index(spark, idx)
-    table = os.path.join(idx, DS.HASHED)
+    table = os.path.join(idx, DS.PAYLOAD)
     [merged] = [d for d in os.listdir(table) if d.startswith("batch=")]
     os.rename(os.path.join(table, merged), os.path.join(table, ".compact_tmp"))
     assert os.path.exists(os.path.join(table, ".compact_tmp", "_SUCCESS"))
@@ -395,8 +394,8 @@ def test_compact_index_recovers_partial_deletion_without_data_loss(spark, tmp_pa
     )
 
     stats = DS.compact_index(spark, idx)
-    assert stats[DS.HASHED]["recovered"] is True
-    assert stats[DS.HASHED]["files_before"] is None
+    assert stats[DS.PAYLOAD]["recovered"] is True
+    assert stats[DS.PAYLOAD]["files_before"] is None
     assert [d for d in os.listdir(table) if d.startswith("batch=")] == ["batch=0"]
     got = {
         (r["doc_id_a"], r["doc_id_b"])
@@ -420,17 +419,17 @@ def test_compacted_dir_is_batch_zero_never_a_retryable_id(spark, tmp_path):
     DS.write_index_batch(a, idx, 0)
     DS.write_index_batch(b, idx, 1)
     DS.compact_index(spark, idx)
-    for t in (DS.SIGS, DS.HASHED, DS.BUCKETS):
+    for t in (DS.PAYLOAD, DS.BUCKETS):
         dirs = [d for d in os.listdir(os.path.join(idx, t)) if d.startswith("batch=")]
         assert dirs == ["batch=0"]
     # the violated-precondition retry: batch id 1 replays post-compaction
     DS.write_index_batch(b, idx, 1)
-    hashed = spark.read.option("basePath", f"{idx}/hashed").parquet(
-        f"{idx}/hashed/batch=*"
+    payload = spark.read.option("basePath", f"{idx}/payload").parquet(
+        f"{idx}/payload/batch=*"
     )
     # all 6 docs still indexed (merged rows survive; the retry only
     # re-added its own 3 under batch=1)
-    assert hashed.select("doc_id").distinct().count() == 6
+    assert payload.select("doc_id").distinct().count() == 6
 
 
 @pytest.mark.slow  # maintenance/soak-grade runtime; deselected from the bounded default gate (pytest.ini)
@@ -452,7 +451,7 @@ def test_needs_compaction_decision_arithmetic(spark, tmp_path, monkeypatch):
         )
     monkeypatch.undo()
     before = DS.needs_compaction(idx, max_files=2)
-    assert set(before["tables"]) == {DS.SIGS, DS.HASHED, DS.BUCKETS}
+    assert set(before["tables"]) == {DS.PAYLOAD, DS.BUCKETS}
     assert before["worst"] >= 3  # one file per bucket per batch, 3 batches
     assert before["needed"] is True
     # a lax threshold says don't bother
