@@ -8,7 +8,7 @@ before/after; PLANS_ROUND defaults to r11).
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_streaming_polymarket_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_streaming_polymarket_pipeline_spark.plans import registry  # noqa: E402

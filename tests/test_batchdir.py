@@ -18,6 +18,7 @@ import os
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from kafka_streaming_polymarket_pipeline_spark.operators import dedup as D
 from kafka_streaming_polymarket_pipeline_spark.streaming import batchdir
@@ -25,6 +26,7 @@ from kafka_streaming_polymarket_pipeline_spark.streaming import boilerplate_stre
 from kafka_streaming_polymarket_pipeline_spark.streaming import containment_stream as CS
 from kafka_streaming_polymarket_pipeline_spark.streaming import dedup_stream as DS
 from kafka_streaming_polymarket_pipeline_spark.streaming import ingest_stream as IS
+from tests import fixtures as fx
 
 SCHEMA = "doc_id long, text string"
 BASE = (
@@ -112,6 +114,49 @@ def test_empty_first_batch_reads_as_no_batch(spark, tmp_path):
     batch = spark.createDataFrame(BATCH_A[:2], SCHEMA)
     pairs = DS.incremental_pairs_against_index(batch, idx, before_batch=1).collect()
     assert [(r["doc_id_a"], r["doc_id_b"], r["jaccard"]) for r in pairs] == [(0, 1, 1.0)]
+
+
+def test_probe_of_many_batches_lists_on_the_driver(spark, tmp_path):
+    """A probe over 40 batch dirs (above Spark's 32-path default) starts no
+    listing job in the local session, for a flat table and for a kbucketed
+    table read with ``buckets=``. It returns the rows that a control read
+    at the default threshold returns, and that control shows the job."""
+    idx = str(tmp_path / "idx")
+    tables = {"flat": None, "kb": "doc_id"}
+    n = batchdir.layout(idx, tables, create=True).n
+    # both tables written whole, one file per batch dir and bucket
+    rows = spark.range(80).selectExpr("id AS doc_id", "id % 40 AS batch").coalesce(1)
+    rows.write.partitionBy("batch").parquet(os.path.join(idx, "flat"))
+    rows = rows.withColumn(batchdir.KB, batchdir.bucket("doc_id", n))
+    rows.write.partitionBy("batch", batchdir.KB).parquet(os.path.join(idx, "kb"))
+    lay = batchdir.layout(idx, tables)
+    assert lay.batches == {"flat": list(range(40)), "kb": list(range(40))}
+    want = {
+        "flat": list(range(80)),
+        "kb": sorted(r.doc_id for r in rows.filter(F.col(batchdir.KB) < 2).collect()),
+    }
+    sc = spark.sparkContext
+
+    def probe(group):
+        got = {}
+        for name, buckets in (("flat", None), ("kb", [0, 1])):
+            sc.setJobGroup(f"{group}-{name}", name)
+            try:
+                df = batchdir.read(spark, idx, lay, name, before_batch=40, buckets=buckets)
+                ids = sorted(r.doc_id for r in df.collect())
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            got[name] = (len(fx.listing_jobs(spark, f"{group}-{name}")), ids)
+        return got
+
+    local = spark.conf.get(fx.LISTING_CONF)
+    assert probe("driver-listing") == {name: (0, ids) for name, ids in want.items()}
+    spark.conf.set(fx.LISTING_CONF, "32")
+    try:
+        assert probe("job-listing") == {name: (1, ids) for name, ids in want.items()}
+    finally:
+        spark.conf.set(fx.LISTING_CONF, local)
 
 
 # sink -> (start(stream, root), output dirs, index tables)

@@ -12,7 +12,7 @@ from datetime import timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_streaming_polymarket_pipeline_spark import silver
+from kafka_streaming_polymarket_pipeline_spark import schemas, silver
 from kafka_streaming_polymarket_pipeline_spark.operators import book
 from kafka_streaming_polymarket_pipeline_spark.streaming import jobs
 from tests import fixtures as fx
@@ -49,6 +49,38 @@ def test_file_bronze_stream_is_streaming_and_typed(spark, tmp_path):
     out = jobs.run_available_now(typed, "t_typed", spark)
     assert out.count() == 5
     assert {r.ticker for r in out.collect()} == {"BTC"}
+
+
+def test_file_trigger_lists_its_files_on_the_driver(spark, tmp_path):
+    """A 40-file trigger (above Spark's 32-path default) starts no listing
+    job in the local session, and reads what a batch read of the files
+    reads. The control run at the default threshold shows the job."""
+    d = tmp_path / "bronze"
+    for i, m in enumerate(fx.asset_prices(40)):
+        _write_bronze_jsonl(d / f"part-{i:02d}.jsonl", [m], "asset-prices")
+    want = sorted(spark.read.schema(schemas.BRONZE).json(str(d)).collect())
+    local = spark.conf.get(fx.LISTING_CONF)
+
+    def trigger(name):
+        q = (
+            jobs.file_bronze_stream(spark, str(d))
+            .writeStream.format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return fx.listing_jobs(spark, str(q.runId)), sorted(spark.table(name).collect())
+
+    listed, got = trigger("t_driver_listing")
+    assert listed == [] and got == want
+    spark.conf.set(fx.LISTING_CONF, "32")
+    try:
+        listed, got = trigger("t_job_listing")
+    finally:
+        spark.conf.set(fx.LISTING_CONF, local)
+    assert len(listed) == 1 and listed[0].startswith("Listing leaf files and directories for 40 paths")
+    assert got == want
 
 
 def test_downsample_last_latest_wins(spark, tmp_path):
