@@ -5,17 +5,15 @@ ones that transfer to a 1000-executor cluster: AQE on (runtime re-plan,
 skew-join splitting, partition coalescing), shuffle partitions sized to the
 parallelism at hand rather than the 200 default, UTC session time so
 event-time semantics are reproducible, and Arrow enabled so any
-Pandas-UDF path is batch-vectorized. A local session lists a read's file
-paths (up to 10000) on the driver, where Spark would start a listing job
-above 32 paths (a file-stream trigger, a ``batch=<id>`` index probe); a
-cluster session keeps Spark's default, because there the job spreads a
-remote store's per-path round trips over the executors.
+Pandas-UDF path is batch-vectorized. A ``get_spark`` session lists a
+read's file paths on the driver (``_LOCAL_LISTING_THRESHOLD``); a cluster
+session keeps Spark's default, where a listing job spreads a remote store's
+per-path round trips over the executors.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import time
 
 from pyspark.sql import SparkSession
@@ -23,14 +21,16 @@ from pyspark.sql import SparkSession
 _DRIVER_MEM_CAP_GIB = 48
 _CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
 # Above this many paths a read's InMemoryFileIndex lists them with a Spark
-# job, one task per path. In local mode those tasks run on the driver JVM's
-# own threads, so the job adds only scheduling and task serialization to
-# listings whose getFileStatus costs microseconds: a 120-file stream trigger
-# spent ~0.6 s in it (local[4], 4 vCPU). 10000 is also Spark's cap on the
-# listing job's width.
+# job, one task per path: a file-stream trigger of its new files, or a
+# batchdir probe of its ``batch=<id>`` dirs. In local mode those tasks run on
+# the driver JVM's own threads, so the job adds only scheduling and task
+# serialization: a 120-file stream trigger spent ~0.6 s of its getBatch in it
+# (local[4], 4 vCPU). This assumes a local filesystem, where getFileStatus
+# costs microseconds; a local session reading thousands of paths on a remote
+# store (s3a, hdfs) would list them one after another on the driver. 10000 is
+# also Spark's cap on the listing job's width.
 _LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _LOCAL_LISTING_THRESHOLD = 10000
-_LOCAL_MASTER = re.compile(r"local(\[.*\])?")
 
 
 def host_memory_bytes(cgroup_memory_max: str = _CGROUP_MEMORY_MAX) -> int | None:
@@ -110,9 +110,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; static configs
     (driver memory) are fixed by then, but SQL conf is not. Pin UTC so
-    timestamp comparisons against the (UTC-naive) DuckDB oracle hold. A
-    ``local[...]`` session also gets the driver-side file listing of
-    :func:`get_spark`; any other master keeps its listing conf.
+    timestamp comparisons against the (UTC-naive) DuckDB oracle hold.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Pinning the SQL session tz makes the JVM compute in UTC, but PySpark's
@@ -130,8 +128,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:
         pass  # conf may be static in some deployments; AQE is an optimization only
-    if _LOCAL_MASTER.fullmatch(spark.sparkContext.master):
-        spark.conf.set(_LISTING_THRESHOLD_CONF, str(_LOCAL_LISTING_THRESHOLD))
     _ship_package(spark)
     return spark
 

@@ -137,10 +137,8 @@ def _scan(spark: SparkSession, table: str, ids: list[int]) -> DataFrame | None:
     one (a ``batch=*`` glob costs Spark a failed lookup of the literal
     path first); None when those dirs hold no data file, as a 0-row
     write of a kbucketed table leaves a batch dir with only
-    ``_SUCCESS``. Above 32 dirs Spark's default lists them with a Spark
-    job per read; a local session set up by ``session`` lists them on
-    the driver instead (a 40-batch read on local[4], 4 vCPU: one job fewer,
-    ~0.25 s less)."""
+    ``_SUCCESS``. A ``session.get_spark`` session lists the dirs on the
+    driver (``session._LOCAL_LISTING_THRESHOLD``)."""
     from pyspark.errors import AnalysisException
 
     dirs = [os.path.join(table, f"batch={i}") for i in ids]

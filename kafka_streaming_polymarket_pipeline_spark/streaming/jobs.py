@@ -32,10 +32,8 @@ def file_bronze_stream(spark: SparkSession, path: str, max_files: int | None = N
     identical schemas.BRONZE shape — every downstream plan is source-agnostic.
     ``maxFilesPerTrigger`` maps to the Kafka ``maxOffsetsPerTrigger``
     backpressure knob (SURVEY §4). Each trigger's ``getBatch`` indexes the
-    batch's file paths; a local session from ``session.get_spark`` or
-    ``tune_session`` lists them on the driver, where Spark's default would
-    start a listing job above 32 files (~0.5 s of a 120-file trigger on
-    local[4], 4 vCPU).
+    batch's file paths; a ``session.get_spark`` session lists them on the
+    driver (``session._LOCAL_LISTING_THRESHOLD``).
     """
     reader = spark.readStream.schema(schemas.BRONZE)
     if max_files:

@@ -117,10 +117,10 @@ def test_empty_first_batch_reads_as_no_batch(spark, tmp_path):
 
 
 def test_probe_of_many_batches_lists_on_the_driver(spark, tmp_path):
-    """A probe over 40 batch dirs (above Spark's 32-path default) starts no
-    listing job in the local session, for a flat table and for a kbucketed
-    table read with ``buckets=``. It returns the rows that a control read
-    at the default threshold returns, and that control shows the job."""
+    """A probe over 40 batch dirs (above Spark's 32-path default) runs one
+    job fewer in the local session than a control read at the default
+    threshold, the job that lists the dirs, for a flat table and for a
+    kbucketed table read with ``buckets=``; both return the same rows."""
     idx = str(tmp_path / "idx")
     tables = {"flat": None, "kb": "doc_id"}
     n = batchdir.layout(idx, tables, create=True).n
@@ -147,16 +147,19 @@ def test_probe_of_many_batches_lists_on_the_driver(spark, tmp_path):
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
-            got[name] = (len(fx.listing_jobs(spark, f"{group}-{name}")), ids)
+            got[name] = (fx.group_jobs(spark, f"{group}-{name}"), ids)
         return got
 
     local = spark.conf.get(fx.LISTING_CONF)
-    assert probe("driver-listing") == {name: (0, ids) for name, ids in want.items()}
+    driver = probe("driver-listing")
     spark.conf.set(fx.LISTING_CONF, "32")
     try:
-        assert probe("job-listing") == {name: (1, ids) for name, ids in want.items()}
+        job = probe("job-listing")
     finally:
         spark.conf.set(fx.LISTING_CONF, local)
+    assert {name: ids for name, (_, ids) in driver.items()} == want
+    assert {name: ids for name, (_, ids) in job.items()} == want
+    assert {name: n for name, (n, _) in driver.items()} == {name: n - 1 for name, (n, _) in job.items()}
 
 
 # sink -> (start(stream, root), output dirs, index tables)

@@ -3,60 +3,12 @@
 Above ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths
 (Spark's default: 32) a read lists its files with a Spark job, one task per
 path. A local session's tasks run in the driver JVM anyway, so ``get_spark``
-and ``tune_session`` raise the threshold for ``local[...]`` masters; a
-cluster master keeps Spark's default.
+raises the threshold (``session._LOCAL_LISTING_THRESHOLD``).
 """
 
-from types import SimpleNamespace
-
-import pytest
-
-from kafka_streaming_polymarket_pipeline_spark import session
-from kafka_streaming_polymarket_pipeline_spark.session import tune_session
 from tests.fixtures import LISTING_CONF
-
-
-@pytest.fixture
-def no_process_side_effects(monkeypatch):
-    """tune_session without its process-wide effects on the shared test
-    session: the process tz is already pinned, the package is not shipped."""
-    monkeypatch.setenv("TZ", "UTC")
-    monkeypatch.setattr(session, "_ship_package", lambda spark: None)
 
 
 def test_get_spark_lists_on_the_driver(spark):
     assert spark.sparkContext.master.startswith("local[")
     assert spark.conf.get(LISTING_CONF) == "10000"
-
-
-def test_tune_session_sets_local_listing(spark, no_process_side_effects):
-    before = spark.conf.get(LISTING_CONF)
-    spark.conf.unset(LISTING_CONF)
-    try:
-        assert spark.conf.get(LISTING_CONF) == "32"  # Spark's default
-        tune_session(spark)
-        assert spark.conf.get(LISTING_CONF) == "10000"
-    finally:
-        spark.conf.set(LISTING_CONF, before)
-
-
-class _Conf(dict):
-    def set(self, key, value):
-        self[key] = value
-
-
-@pytest.mark.parametrize(
-    "master, listing",
-    [
-        ("local", True),
-        ("local[*]", True),
-        ("local[4, 2]", True),
-        ("spark://head:7077", False),
-        ("yarn", False),
-        ("local-cluster[2,1,1024]", False),
-    ],
-)
-def test_tune_session_leaves_cluster_listing_alone(master, listing, no_process_side_effects):
-    fake = SimpleNamespace(conf=_Conf(), sparkContext=SimpleNamespace(master=master))
-    tune_session(fake)
-    assert (LISTING_CONF in fake.conf) == listing

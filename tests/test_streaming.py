@@ -52,9 +52,9 @@ def test_file_bronze_stream_is_streaming_and_typed(spark, tmp_path):
 
 
 def test_file_trigger_lists_its_files_on_the_driver(spark, tmp_path):
-    """A 40-file trigger (above Spark's 32-path default) starts no listing
-    job in the local session, and reads what a batch read of the files
-    reads. The control run at the default threshold shows the job."""
+    """A 40-file trigger (above Spark's 32-path default) runs one job fewer
+    in the local session than a control run at the default threshold, the
+    job that lists the files, and both read what a batch read reads."""
     d = tmp_path / "bronze"
     for i, m in enumerate(fx.asset_prices(40)):
         _write_bronze_jsonl(d / f"part-{i:02d}.jsonl", [m], "asset-prices")
@@ -70,17 +70,17 @@ def test_file_trigger_lists_its_files_on_the_driver(spark, tmp_path):
             .start()
         )
         q.awaitTermination()
-        return fx.listing_jobs(spark, str(q.runId)), sorted(spark.table(name).collect())
+        return fx.group_jobs(spark, str(q.runId)), sorted(spark.table(name).collect())
 
-    listed, got = trigger("t_driver_listing")
-    assert listed == [] and got == want
+    n_driver, got = trigger("t_driver_listing")
+    assert got == want
     spark.conf.set(fx.LISTING_CONF, "32")
     try:
-        listed, got = trigger("t_job_listing")
+        n_job, got = trigger("t_job_listing")
     finally:
         spark.conf.set(fx.LISTING_CONF, local)
-    assert len(listed) == 1 and listed[0].startswith("Listing leaf files and directories for 40 paths")
     assert got == want
+    assert n_driver == n_job - 1
 
 
 def test_downsample_last_latest_wins(spark, tmp_path):
