@@ -29,7 +29,6 @@ the OPH signature (d3d) and the DF-pruned stream (d3c).
 
 from __future__ import annotations
 
-import os
 import random
 import sys
 from collections.abc import Callable
@@ -48,9 +47,9 @@ NUM_PERM = 128
 # signature / hashed-shingle projections of the payload and switch to
 # shuffle-hash on doc_id (candidate-local either way).  ~1 KB/doc of
 # 128-int signatures and a similar hashed-array payload put the
-# broadcast budget around a few hundred MB at the default; the 100 TB
-# path needs no code edit, only (optionally) this env knob.
-BROADCAST_VERIFY_MAX_DOCS = int(os.environ.get("PMPS_BROADCAST_VERIFY_MAX_DOCS", "500000"))
+# broadcast budget around a few hundred MB; the 100 TB path needs no
+# code edit.
+BROADCAST_VERIFY_MAX_DOCS = 500_000
 
 
 def _doc_side(df: DataFrame, n_docs: int | None) -> DataFrame:

@@ -24,6 +24,14 @@ written, before any batch dir exists, and every later write and probe
 resolves it from there; :data:`N_BUCKETS` only seeds new indexes. The
 file is written once (an atomic replace) and compaction never touches it.
 
+Reads. A probe reads a table with the schema of ``part``, the batch's own
+rows of that table, which it unions with the read's result (so the two
+must match anyway); Spark is handed that schema and starts no
+schema-inference job. The read always returns a frame with ``part``'s
+columns: a table with no batch yet, or whose batch dirs hold only
+``_SUCCESS`` (a 0-row write of a kbucketed table), reads as 0 rows, and
+a sink needs no empty-index branch.
+
 Replay guard. A probe reads with ``before_batch=<batch_id>``, and the
 reader hands Spark only the ``batch=<id>`` dirs with ``id <
 before_batch``. A replayed batch therefore never counts the rows its
@@ -56,6 +64,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from kafka_streaming_polymarket_pipeline_spark.streaming import fsio
 
@@ -132,41 +141,37 @@ def layout(
     return Layout(n, batches)
 
 
-def _scan(spark: SparkSession, table: str, ids: list[int]) -> DataFrame | None:
-    """The rows of ``table``'s ``batch=<id>`` dirs in ``ids``, named one by
-    one (a ``batch=*`` glob costs Spark a failed lookup of the literal
-    path first); None when those dirs hold no data file, as a 0-row
-    write of a kbucketed table leaves a batch dir with only
-    ``_SUCCESS``. A ``session.get_spark`` session lists the dirs on the
-    driver (``session._LOCAL_LISTING_THRESHOLD``)."""
-    from pyspark.errors import AnalysisException
-
-    dirs = [os.path.join(table, f"batch={i}") for i in ids]
-    try:
-        return spark.read.option("basePath", table).parquet(*dirs)
-    except AnalysisException as e:
-        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
-            return None
-        raise
-
-
 def read(
-    spark: SparkSession,
     index_path: str,
     lay: Layout,
     name: str,
+    part: DataFrame,
     before_batch: int | None = None,
     *,
     buckets: list[int] | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """One table's rows of every batch below ``before_batch`` (of every
     batch when None), partition-pruned to the ``__kbucket`` values in
-    ``buckets`` when given; None when the table has no such batch or
-    those batches hold no row."""
-    ids = [i for i in lay.batches[name] if before_batch is None or i < before_batch]
-    df = _scan(spark, os.path.join(index_path, name), ids) if ids else None
-    if df is None:
-        return None
+    ``buckets`` when given, with the columns of ``part``, the batch's own
+    rows of the table that the probe unions with them (see Reads). The
+    batch dirs are named one by one (a ``batch=*`` glob costs Spark a
+    failed lookup of the literal path first); a ``session.get_spark``
+    session lists them on the driver (``session._LOCAL_LISTING_THRESHOLD``)."""
+    table = os.path.join(index_path, name)
+    dirs = [
+        os.path.join(table, f"batch={i}")
+        for i in lay.batches[name]
+        if before_batch is None or i < before_batch
+    ]
+    # Partition discovery adds batch and __kbucket from the dir names; the
+    # bucket filter needs __kbucket declared for a read that finds no file.
+    fields = part.schema.fields
+    if buckets is not None:
+        fields = [*fields, StructField(KB, IntegerType())]
+    reader = part.sparkSession.read.schema(StructType(fields))
+    if dirs:  # Spark rejects a missing basePath; a new index has no table dir
+        reader = reader.option("basePath", table)
+    df = reader.parquet(*dirs)
     if buckets is not None:
         df = df.filter(F.col(KB).isin(buckets))
     return df.drop("batch", KB)
@@ -254,13 +259,10 @@ def compact(spark: SparkSession, index_path: str, tables: dict[str, str | None])
             fsio.delete(tmp)  # crashed in step 1: originals intact, redo
             staged = False
         if not staged:
-            if len(batches) <= 1:
-                continue
-            df = _scan(spark, table, lay.batches[name])
-            if df is None:
-                continue  # no rows to merge
-            df = df.drop("batch")
-            files = _parquet_files(table)
+            files = _parquet_files(table) if len(batches) > 1 else []
+            if not files:
+                continue  # nothing to merge
+            df = spark.read.option("basePath", table).parquet(*batches).drop("batch")
             files_before = len(files)
             if key is None:
                 # ~128 MB files: fewer files at small scale, no monster

@@ -72,15 +72,13 @@ def boilerplate_scrub_batch(
         _rebuild_kept_windows,
     )
 
-    spark = new.sparkSession
     lay = batchdir.layout(index_path, TABLES)
-    seen = batchdir.read(spark, index_path, lay, WFREQ, before_batch)
-    if seen is None:
-        seen = spark.createDataFrame([], "ptext string, nd long")
     paras = _batch_windows(new, size).localCheckpoint(eager=True)
     nd_batch = paras.groupBy("_pt").agg(
         F.countDistinct("doc_id").alias("nd")
     )
+    wfreq_part = nd_batch.select(F.col("_pt").alias("ptext"), "nd")
+    seen = batchdir.read(index_path, lay, WFREQ, wfreq_part, before_batch)
     nd_prev = (
         seen.groupBy("ptext")
         .agg(F.sum("nd").alias("_ndp"))
@@ -95,7 +93,6 @@ def boilerplate_scrub_batch(
     )
     kept = paras.join(frequent, "_pt", "left_anti")
     scrubbed = _rebuild_kept_windows(new, "doc_id", paras, kept)
-    wfreq_part = nd_batch.select(F.col("_pt").alias("ptext"), "nd")
     return scrubbed, wfreq_part
 
 

@@ -9,10 +9,12 @@ generation must come from a SHARED-TOKEN inverted index, the same reason
 d15's batch form indexes B's full token set. The index is two tables
 under ``index/``:
 
-  ``inv/batch=<id>``    (tok, doc_id)      — the inverted postings
+  ``inv/batch=<id>``    (doc_id, tok)      — the inverted postings
   ``sizes/batch=<id>``  (doc_id, sz)       — distinct-token set sizes
 
-Both are flat ``streaming/batchdir`` tables (:data:`TABLES`). Per
+Both are flat ``streaming/batchdir`` tables (:data:`TABLES`), read with
+the schema of the batch's own postings and sizes (batchdir's read
+contract: an index with no batch yet reads as 0 rows). Per
 micro-batch (inside one foreachBatch; every write targets ``batch=<id>``
 with overwrite, so a crash retries the whole batch idempotently):
 
@@ -58,17 +60,6 @@ def _token_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return post, sizes
 
 
-def _seen(spark, index_path: str, lay, name: str, schema: str, before_batch):
-    """One index table's rows of the batches before ``before_batch``. The
-    filter is the retry armor: a foreachBatch retry of batch N must NOT
-    see the inv/sizes rows its first attempt already landed under
-    batch=N, or every batch-N token would count twice in the overlap
-    (containment 2.0 rows) and the bwd leg would re-emit reversed
-    duplicates."""
-    df = batchdir.read(spark, index_path, lay, name, before_batch)
-    return df if df is not None else spark.createDataFrame([], schema)
-
-
 def containment_probe_batch(
     new: DataFrame,
     index_path: str,
@@ -82,14 +73,16 @@ def containment_probe_batch(
     batch's index parts for the caller to land. All thresholds integer
     cross-multiplied (d15's discipline). The standing job passes its
     ``batch_id`` as ``before_batch`` so a crashed-then-retried batch
-    never reads its own first attempt's index rows (see _seen)."""
-    spark = new.sparkSession
+    never reads its own first attempt's index rows: a retry of batch N
+    that saw the inv/sizes rows already landed under batch=N would count
+    every batch-N token twice in the overlap (containment 2.0 rows), and
+    the bwd leg would re-emit reversed duplicates."""
     lay = batchdir.layout(index_path, TABLES)
     post, sizes = _token_index(new)
     post = post.localCheckpoint(eager=True)
     sizes = sizes.localCheckpoint(eager=True)
-    seen_post = _seen(spark, index_path, lay, INV, "doc_id long, tok string", before_batch)
-    seen_sizes = _seen(spark, index_path, lay, SIZES, "doc_id long, sz long", before_batch)
+    seen_post = batchdir.read(index_path, lay, INV, post, before_batch)
+    seen_sizes = batchdir.read(index_path, lay, SIZES, sizes, before_batch)
     all_post = seen_post.unionByName(post)
     all_sizes = seen_sizes.unionByName(sizes)
     ov = (

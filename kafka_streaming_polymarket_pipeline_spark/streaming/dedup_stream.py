@@ -37,7 +37,11 @@ append-only: new doc_ids are new keys). The band-bucket table
 ``buckets`` stays flat: its probe is an equi-join on band_hash, which a
 1000-doc batch (64k bands) touches uniformly, so a full scan of
 three-long rows is the honest per-batch floor there (SCALE.md's
-amortization table). A replayed micro-batch probes with
+amortization table). Both reads take their schema from the batch's own
+(payload, buckets) frames (batchdir's read contract), so they start no
+Spark job, and an index with no row yet reads as 0 rows: the probe has
+one path, and on the first batch it checkpoints a candidate set of the
+batch's own pairs. A replayed micro-batch probes with
 ``before_batch=<batch_id>``, so it never reads its first attempt's rows
 (batchdir's replay guard). An index written in the older three-table
 layout (``sigs``/``hashed``) has no ``payload`` table and fails with
@@ -111,35 +115,30 @@ def incremental_pairs_against_index(
     with the same exactness contract as the batch funnel. The standing
     job passes its ``batch_id`` as ``before_batch`` so a replayed batch
     reads only the batches before it (batchdir's replay guard)."""
-    spark = new.sparkSession
     lay = batchdir.layout(index_path, TABLES)
     _, min_bands, est_cutoff = D._lsh_params(threshold)
     payload, new_buckets = parts or checkpointed_parts(new, threshold, n)
 
-    corpus_buckets = batchdir.read(spark, index_path, lay, BUCKETS, before_batch)
-    cand = D._cand_pairs(new_buckets, min_bands, corpus_buckets)
-    if corpus_buckets is not None:
-        # The est/verify stages only need payload rows for CANDIDATE
-        # docs. Materialize the (small) candidate set once, derive its
-        # touched doc-id buckets — a bounded <= n-bucket driver-side int
-        # list, with the index's PINNED count — and partition-prune the
-        # corpus payload read to those dirs. The batch's own rows come
-        # from the in-memory checkpointed parts.
-        cand = cand.localCheckpoint(eager=True)
-        touched = sorted(
-            r["kb"]
-            for r in cand.select(
-                F.explode(
-                    F.array(batchdir.bucket("doc_id_a", lay.n), batchdir.bucket("doc_id_b", lay.n))
-                ).alias("kb")
-            )
-            .distinct()
-            .collect()
+    corpus_buckets = batchdir.read(index_path, lay, BUCKETS, new_buckets, before_batch)
+    # The est/verify stages only need payload rows for CANDIDATE docs.
+    # Materialize the (small) candidate set once, derive its touched
+    # doc-id buckets — a bounded <= n-bucket driver-side int list, with
+    # the index's PINNED count — and partition-prune the corpus payload
+    # read to those dirs. The batch's own rows come from the in-memory
+    # checkpointed parts.
+    cand = D._cand_pairs(new_buckets, min_bands, corpus_buckets).localCheckpoint(eager=True)
+    touched = sorted(
+        r["kb"]
+        for r in cand.select(
+            F.explode(
+                F.array(batchdir.bucket("doc_id_a", lay.n), batchdir.bucket("doc_id_b", lay.n))
+            ).alias("kb")
         )
-        corpus = batchdir.read(spark, index_path, lay, PAYLOAD, before_batch, buckets=touched)
-        # None when every earlier batch was empty (no kbucketed file to read)
-        if corpus is not None:
-            payload = corpus.unionByName(payload)
+        .distinct()
+        .collect()
+    )
+    corpus = batchdir.read(index_path, lay, PAYLOAD, payload, before_batch, buckets=touched)
+    payload = corpus.unionByName(payload)
     # one frame for both stages, as in the batch funnel: column pruning
     # keeps the estimate's scan on doc_id and m0..m127
     return D._verify_jaccard(D._est_filter(cand, payload, est_cutoff), payload, threshold)

@@ -211,6 +211,7 @@ def pruning_probe() -> None:
     )
 
     seen_touched: list = []
+    parts = ds.checkpointed_parts(new)
 
     def run(pruned: bool):
         orig = batchdir.read
@@ -222,7 +223,6 @@ def pruning_probe() -> None:
 
         batchdir.read = spy
         try:
-            parts = ds.checkpointed_parts(new)
             t0 = time.perf_counter()
             pairs = ds.incremental_pairs_against_index(new, index_path, parts=parts)
             rows = {(r["doc_id_a"], r["doc_id_b"]) for r in pairs.collect()}
@@ -236,10 +236,10 @@ def pruning_probe() -> None:
 
     # payload rows each mode reads (the payload table)
     lay = batchdir.layout(index_path, ds.TABLES)
-    full_rows = batchdir.read(spark, index_path, lay, ds.PAYLOAD).count()
+    full_rows = batchdir.read(index_path, lay, ds.PAYLOAD, parts[0]).count()
     touched = sorted(set(seen_touched[0])) if seen_touched else []
     pruned_rows = (
-        batchdir.read(spark, index_path, lay, ds.PAYLOAD, buckets=touched).count()
+        batchdir.read(index_path, lay, ds.PAYLOAD, parts[0], buckets=touched).count()
         if touched
         else 0
     )

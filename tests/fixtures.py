@@ -5,6 +5,7 @@ and the streaming micro-batch tests."""
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
 from datetime import datetime, timedelta, timezone
 
 T0 = datetime(2026, 1, 25, 19, 45, 0, tzinfo=timezone.utc)
@@ -145,6 +146,18 @@ def bronze_rows(spark, messages: list[dict], topic: str):
 # --- Spark job accounting ---
 
 LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+@contextmanager
+def job_group(spark, group: str):
+    """Run the block's Spark jobs in job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def group_jobs(spark, group: str) -> int:

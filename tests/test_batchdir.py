@@ -102,18 +102,73 @@ def test_unknown_layout_fails_loudly_before_any_write(spark, tmp_path, state):
     assert _files(tmp_path) == before
 
 
+def test_read_starts_no_job(spark, tmp_path):
+    """A probe read takes its schema from the batch part it is unioned
+    with, so it starts no Spark job before an action, and it returns the
+    part's columns: for a flat table and for a kbucketed table read with
+    ``buckets=``, over an index with a batch, an index whose only batch
+    holds no row, and an index with no batch."""
+    docs = spark.createDataFrame(BATCH_A, SCHEMA)
+    payload, buckets = DS.checkpointed_parts(docs)
+    full, empty, new = (str(tmp_path / d) for d in ("full", "empty", "new"))
+    DS.write_index_batch(docs, full, 0, parts=(payload, buckets))
+    DS.write_index_batch(spark.createDataFrame([], SCHEMA), empty, 0)
+    for idx in (full, empty, new):
+        lay = batchdir.layout(idx, DS.TABLES)
+        for name, part, kb in (
+            (DS.BUCKETS, buckets, None),
+            (DS.PAYLOAD, payload, list(range(lay.n))),
+        ):
+            group = f"read-{os.path.basename(idx)}-{name}"
+            with fx.job_group(spark, group):
+                df = batchdir.read(idx, lay, name, part, before_batch=1, buckets=kb)
+            assert fx.group_jobs(spark, group) == 0, group
+            assert df.columns == part.columns, group
+            assert df.count() == (part.count() if idx == full else 0), group
+
+
 def test_empty_first_batch_reads_as_no_batch(spark, tmp_path):
-    """A 0-row first batch leaves the kbucketed tables' batch=0 dirs with
-    no data file; a later probe reads them as no batch at all and finds
-    the pairs among its own documents."""
+    """A 0-row first batch leaves the kbucketed payload's batch=0 dir with
+    no data file; a later probe reads it as 0 rows with the batch part's
+    columns and finds the pairs among its own documents."""
     idx = str(tmp_path / "idx")
     DS.write_index_batch(spark.createDataFrame([], SCHEMA), idx, 0)
     lay = batchdir.layout(idx, DS.TABLES)
     assert lay.batches[DS.PAYLOAD] == [0]
-    assert batchdir.read(spark, idx, lay, DS.PAYLOAD, before_batch=1) is None
     batch = spark.createDataFrame(BATCH_A[:2], SCHEMA)
-    pairs = DS.incremental_pairs_against_index(batch, idx, before_batch=1).collect()
+    parts = DS.checkpointed_parts(batch)
+    seen = batchdir.read(idx, lay, DS.PAYLOAD, parts[0], 1, buckets=list(range(lay.n)))
+    assert seen.columns == parts[0].columns and seen.count() == 0
+    pairs = DS.incremental_pairs_against_index(batch, idx, parts=parts, before_batch=1).collect()
     assert [(r["doc_id_a"], r["doc_id_b"], r["jaccard"]) for r in pairs] == [(0, 1, 1.0)]
+
+
+def _containment_probe(new, idx, before_batch):
+    pairs, post, sizes = CS.containment_probe_batch(new, idx, before_batch=before_batch)
+    return pairs, {CS.INV: post, CS.SIZES: sizes}
+
+
+def _boilerplate_probe(new, idx, before_batch):
+    scrubbed, wfreq = BS.boilerplate_scrub_batch(new, idx, size=4, before_batch=before_batch)
+    return scrubbed, {BS.WFREQ: wfreq}
+
+
+@pytest.mark.parametrize(
+    "probe,tables",
+    [(_containment_probe, CS.TABLES), (_boilerplate_probe, BS.TABLES)],
+    ids=["containment", "boilerplate"],
+)
+def test_probe_after_empty_first_batch_equals_fresh_index(spark, tmp_path, probe, tables):
+    """A 0-row batch 0 lands 0-row index tables; batch 1's probe reads them
+    as 0 rows and emits what a probe of a fresh index emits."""
+    idx = str(tmp_path / "idx")
+    out, parts = probe(spark.createDataFrame([], SCHEMA), idx, 0)
+    assert out.count() == 0
+    batchdir.write_tables(idx, tables, 0, parts)
+    batch = spark.createDataFrame(BATCH_A, SCHEMA)
+    got = sorted(probe(batch, idx, 1)[0].collect())
+    want = sorted(probe(batch, str(tmp_path / "fresh"), 1)[0].collect())
+    assert got == want and want
 
 
 def test_probe_of_many_batches_lists_on_the_driver(spark, tmp_path):
@@ -135,18 +190,14 @@ def test_probe_of_many_batches_lists_on_the_driver(spark, tmp_path):
         "flat": list(range(80)),
         "kb": sorted(r.doc_id for r in rows.filter(F.col(batchdir.KB) < 2).collect()),
     }
-    sc = spark.sparkContext
+    part = spark.range(0).selectExpr("id AS doc_id")
 
     def probe(group):
         got = {}
         for name, buckets in (("flat", None), ("kb", [0, 1])):
-            sc.setJobGroup(f"{group}-{name}", name)
-            try:
-                df = batchdir.read(spark, idx, lay, name, before_batch=40, buckets=buckets)
+            with fx.job_group(spark, f"{group}-{name}"):
+                df = batchdir.read(idx, lay, name, part, before_batch=40, buckets=buckets)
                 ids = sorted(r.doc_id for r in df.collect())
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
             got[name] = (fx.group_jobs(spark, f"{group}-{name}"), ids)
         return got
 

@@ -102,10 +102,11 @@ def test_index_payload_reads_partition_prune(spark, tmp_path):
         "doc_id long, text string",
     )
     idx = str(tmp_path / "idx")
-    DS.write_index_batch(docs, idx, 0)
+    parts = DS.checkpointed_parts(docs)
+    DS.write_index_batch(docs, idx, 0, parts=parts)
     assert DS.needs_compaction(idx)["tables"] == {DS.PAYLOAD: 1, DS.BUCKETS: 1}
     lay = batchdir.layout(idx, DS.TABLES)
-    pruned = batchdir.read(spark, idx, lay, DS.PAYLOAD, buckets=[3, 7])
+    pruned = batchdir.read(idx, lay, DS.PAYLOAD, parts[0], buckets=[3, 7])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__kbucket" in plan
     want = {
